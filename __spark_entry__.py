@@ -3635,8 +3635,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_manifest_merge(spark, sf):
         """The incremental-release fold: split the corpus into three
-        disjoint sub-corpora (doc_id % 3 — the shape of daily
-        increments or streaming micro-batches), manifest each part
+        disjoint sub-corpora (pmod(doc_id, 3), so negative ids land in
+        a part too — the shape of daily increments or streaming
+        micro-batches), manifest each part
         independently, then fold the parts with
         :func:`merge_manifests` (sum counts/bytes, XOR digests,
         min/max id ranges). Because every column's fold is associative
@@ -3652,7 +3653,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         docs = _docs(spark, sf)
         parts = [
-            manifest_agg(docs.filter(F.expr(f"doc_id % 3 = {r}")), n_shards=16)
+            manifest_agg(docs.filter(F.expr(f"pmod(doc_id, 3) = {r}")), n_shards=16)
             for r in range(3)
         ]
         u = parts[0].unionAll(parts[1]).unionAll(parts[2])
@@ -4322,14 +4323,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _topk_batch_sql() -> str:
-    from pdf_extraction_spark.operators.topk import sql_cosine
+    from pdf_extraction_spark.operators.topk import sql_complete_vec, sql_cosine
 
     selects = []
     for j in range(3):
         qv = _query_vec()[j:] + _query_vec()[:j]
         selects.append(
             f"SELECT CAST({j} AS BIGINT) AS q_id, vec_id, {sql_cosine('embedding', qv, 6)} AS similarity "
-            "FROM embeddings WHERE embedding IS NOT NULL"
+            f"FROM embeddings WHERE {sql_complete_vec('embedding')}"
         )
     allq = " UNION ALL ".join(selects)
     # NaN/NULL similarities normalize to -inf BEFORE ranking — DuckDB's
@@ -4557,7 +4558,7 @@ def oracle_sql() -> dict[str, str]:
         sql_detect_language,
         sql_token_count,
     )
-    from pdf_extraction_spark.operators.topk import sql_cosine
+    from pdf_extraction_spark.operators.topk import sql_complete_vec, sql_cosine
 
     wc = sql_word_count("text")
 
@@ -5224,7 +5225,7 @@ def oracle_sql() -> dict[str, str]:
             "(sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) * "
             "sqrt(list_dot_product(c.centroid, c.centroid))) END AS sim "
             "FROM embeddings e, " + _fixture("ivf_centroids_sf0_01.parquet") + " c "
-            "WHERE e.embedding IS NOT NULL), "
+            "WHERE " + sql_complete_vec("e.embedding") + "), "
             "assign AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, "
             "row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rk FROM s) "
             "WHERE rk = 1), "
@@ -5247,7 +5248,7 @@ def oracle_sql() -> dict[str, str]:
             "(sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) * "
             "sqrt(list_dot_product(c.centroid, c.centroid))) END AS sim "
             "FROM embeddings e, " + _fixture("ivf_centroids_sf0_01.parquet") + " c "
-            "WHERE e.embedding IS NOT NULL), "
+            "WHERE " + sql_complete_vec("e.embedding") + "), "
             "assign AS (SELECT vec_id, cell FROM (SELECT vec_id, cell, "
             "row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rk FROM s) "
             "WHERE rk = 1), "
@@ -5269,7 +5270,7 @@ def oracle_sql() -> dict[str, str]:
             "(sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) * "
             "sqrt(list_dot_product(c.centroid, c.centroid))) END AS sim "
             "FROM embeddings e, " + _fixture("ivf_centroids_sf0_01.parquet") + " c "
-            "WHERE e.embedding IS NOT NULL) "
+            "WHERE " + sql_complete_vec("e.embedding") + ") "
             "SELECT vec_id, cell FROM (SELECT vec_id, cell, "
             "row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rk FROM s) "
             "WHERE rk = 1"

@@ -17,7 +17,7 @@ from .executives import extract_roster, name_matches
 from .rerank import recency_weight, weighted_score
 from .pdfio import build_minimal_pdf, extract_pdf_text
 from .htmlio import decode_html_payload, extract_main_content, extract_title
-from .extract import extract_document_text, extract_document_title
+from .extract import extract_document_text
 
 __all__ = [
     "clean_text",
@@ -38,5 +38,4 @@ __all__ = [
     "extract_title",
     "decode_html_payload",
     "extract_document_text",
-    "extract_document_title",
 ]

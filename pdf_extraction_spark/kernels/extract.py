@@ -31,15 +31,11 @@ def extract_document_text(url: str, payload: bytes) -> str:
     return clean_text(extract_raw_text(url, payload))
 
 
-def extract_document_title(url: str, payload: bytes) -> str:
-    """Title column: HTML <title>/<h1>; first non-empty line for PDFs."""
-    return extract_document(url, payload)[0]
-
-
 def extract_document(url: str, payload: bytes) -> tuple:
     """(title, cleaned_text) in ONE pass — payload decode / PDF parse
-    happen once; ``text`` is byte-identical to
-    :func:`extract_document_text` (asserted in tests)."""
+    happen once. Title: HTML <title>/<h1>; first non-empty line for
+    PDFs. ``text`` is byte-identical to :func:`extract_document_text`
+    (asserted in tests)."""
     if is_pdf_payload(url, payload):
         raw = extract_pdf_text(payload)
         title = ""

@@ -117,8 +117,6 @@ class _BlockParser(HTMLParser):
         self._flush()
 
 
-_EMPTY = _Block([], 0, False)
-
 # ---------------------------------------------------------------------------
 # fast regex block scanner — same block semantics as _BlockParser but
 # ~4× faster (html.parser's per-char state machine dominates the
@@ -243,21 +241,6 @@ def _scan_blocks(html: str):
     return blocks
 
 
-def _is_content(prev: _Block, curr: _Block, nxt: _Block) -> bool:
-    """Boilerpipe NumWordsRulesClassifier decision tree (public, WSDM'10)."""
-    if curr.link_density > 0.333333:
-        return False
-    if prev.link_density <= 0.555556:
-        if curr.num_words <= 16:
-            if nxt.num_words <= 15:
-                return prev.num_words > 4
-            return True
-        return True
-    if curr.num_words <= 40:
-        return nxt.num_words > 17
-    return True
-
-
 def _parser_blocks(html: str):
     """Reference block segmentation via html.parser (slow path; kept for
     parity testing against the fast scanner)."""
@@ -283,7 +266,8 @@ def _keep_flags(blocks):
         prev_ld = ld[i - 1] if i > 0 else 0.0
         prev_nw = nw[i - 1] if i > 0 else 0
         next_nw = nw[i + 1] if i + 1 < n else 0
-        # NumWordsRulesClassifier inlined over scalar features
+        # Boilerpipe NumWordsRulesClassifier decision tree (WSDM'10),
+        # inlined over scalar features
         if ld[i] > 0.333333:
             keep = False
         elif prev_ld <= 0.555556:

@@ -72,6 +72,22 @@ def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "
 
 # --- word n-gram Jaccard ----------------------------------------------------
 
+def _gram_tokens(text_col: str):
+    """Case-folded, whitespace-split, non-empty tokens — the ONE token
+    rule of :func:`shingle_df` and :func:`shingle_hash_df`, so a hash
+    prefilter can never miss a gram its exact recheck would match.
+
+    İ/Σ are pre-mapped before lower() (curation._lower_words
+    rationale): shingle VALUES flow into the KMV/HLL sketches as
+    hashes, so the case fold must be identical cross-engine — the two
+    contextual/one-to-many Unicode case mappings are the only places
+    the engines' lower() disagree (case-folding parity fuzz)."""
+    return F.filter(
+        F.split(F.lower(F.translate(F.col(text_col), "İΣ", "iσ")), r"\s+"),
+        lambda x: x != F.lit(""),
+    )
+
+
 def shingle_df(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     """One row per distinct word-n-gram per doc (native: lowercase →
     split → sliding window).
@@ -81,18 +97,8 @@ def shingle_df(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFra
     ``slice``-per-offset formulation is O(L²) per doc and dominated the
     whole ngram_jaccard runtime; and the token expression must be a
     bound column, not inlined into the lambda, or Catalyst re-evaluates
-    the split per element.)
-
-    İ/Σ are pre-mapped before lower() (curation._lower_words
-    rationale): shingle VALUES flow into the KMV/HLL sketches as
-    hashes, so the case fold must be identical cross-engine — the two
-    contextual/one-to-many Unicode case mappings are the only places
-    the engines' lower() disagree (case-folding parity fuzz)."""
-    toks_expr = F.filter(
-        F.split(F.lower(F.translate(F.col(text_col), "İΣ", "iσ")), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
-    with_toks = df.select(F.col(id_col).alias("doc_id"), toks_expr.alias("__toks"))
+    the split per element.)"""
+    with_toks = df.select(F.col(id_col).alias("doc_id"), _gram_tokens(text_col).alias("__toks"))
     toks = F.col("__toks")
     grams_all = F.transform(
         toks,
@@ -129,10 +135,7 @@ def shingle_hash_df(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Da
     token tuples always hash equal. Mirrors shingle_df's short-doc rule
     (1..n-1 tokens → one whole-text gram, hashed as the joined string;
     0 tokens → none)."""
-    toks_expr = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != F.lit("")
-    )
-    with_toks = df.select(F.col(id_col).alias("doc_id"), toks_expr.alias("__toks"))
+    with_toks = df.select(F.col(id_col).alias("doc_id"), _gram_tokens(text_col).alias("__toks"))
     toks = F.col("__toks")
     hashes_all = F.transform(
         toks,

@@ -1,73 +1,23 @@
-"""Extraction operator (S3/S4 + P1): pages → pages with extracted text.
+"""Extraction operator (S3/S4 + P1 + T1): pages → extracted text + turns.
 
+``extract_parse`` is the one extraction entry point: a single
 ``mapInPandas`` over Arrow batches of ``html:binary``; each batch row is
-dispatched to the PDF byte-stream parser or the HTML block classifier and
-normalized (kernels.extract — the byte-identity contract). The UDF runs
-executor-side over Arrow batches — the only JVM↔Python crossing in the
-extract stage; no driver-side loops.
+dispatched to the PDF byte-stream parser or the HTML block classifier,
+normalized (kernels.extract — the byte-identity contract) and segmented
+into dialogue turns. The UDF runs executor-side over Arrow batches — the
+only JVM↔Python crossing in the extract stage; no driver-side loops.
 
 Scale notes (100 TB): the stage is embarrassingly parallel and
-shuffle-free unless ``repartition_by_url`` is requested — which hashes on
-``xxhash64(url)`` so work distribution is independent of crawl file
-layout (hot hosts don't pin to one task). Arrow batches are kept small
+shuffle-free. Callers that want work distribution independent of crawl
+file layout hash on url first — ``pages.repartition(n, F.xxhash64("url"))``
+— as the bucketed job in plans/lineage.py does with
+``pmod(xxhash64(url), B)``. Arrow batches are kept small
 (session.ARROW_BATCH_ROWS) because payloads are MB-scale.
 """
 
-import time
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..kernels.extract import EXTRACTOR_VERSION, extract_document_text, is_pdf_payload
-
-EXTRACTED_SCHEMA = (
-    "url string, warc_ts timestamp, text string, lang string, "
-    "doc_type string, payload_bytes long"
-)
-
-# extended schema when lineage capture is on: one extra row per batch is
-# NOT emitted — lineage aggregates per partition in plans/lineage.py
-EXTRACT_WITH_PARTITION_SCHEMA = EXTRACTED_SCHEMA + ", partition_id int, extract_wall_s double"
-
-
-def _extract_batches(batches, with_partition: bool):
-    import pandas as pd
-
-    try:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    except Exception:  # pragma: no cover
-        pid = -1
-
-    for pdf in batches:
-        t0 = time.perf_counter()
-        urls = pdf["url"].tolist()
-        payloads = pdf["html"].tolist()
-        texts = []
-        doc_types = []
-        sizes = []
-        for url, payload in zip(urls, payloads):
-            payload = payload if payload is not None else b""
-            doc_types.append("pdf" if is_pdf_payload(url, payload) else "html")
-            texts.append(extract_document_text(url, payload))
-            sizes.append(len(payload))
-        out = pd.DataFrame(
-            {
-                "url": urls,
-                "warc_ts": pdf["warc_ts"],
-                "text": texts,
-                "lang": pdf["lang"],
-                "doc_type": doc_types,
-                "payload_bytes": sizes,
-            }
-        )
-        if with_partition:
-            wall = time.perf_counter() - t0
-            out["partition_id"] = pid
-            out["extract_wall_s"] = wall
-        yield out
-
+from ..kernels.extract import EXTRACTOR_VERSION, is_pdf_payload
 
 FUSED_SCHEMA = (
     "url string, warc_ts timestamp, title string, text string, lang string, "
@@ -117,31 +67,9 @@ def _extract_parse_batches(batches):
         )
 
 
-def extract_parse(pages: DataFrame, repartition: int | None = None) -> DataFrame:
+def extract_parse(pages: DataFrame) -> DataFrame:
     """pages → extracted text + parsed turns in one fused Python stage."""
-    df = pages
-    if repartition:
-        df = df.repartition(repartition, F.xxhash64("url"))
-    return df.mapInPandas(_extract_parse_batches, schema=FUSED_SCHEMA)
-
-
-def extract_text(
-    pages: DataFrame,
-    repartition: int | None = None,
-    with_partition_info: bool = False,
-) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → extracted docs.
-
-    ``repartition`` hashes rows by xxhash64(url) first (uniform work
-    distribution at cluster scale; skip locally when input partitioning is
-    already fine — the repartition is an explicit shuffle)."""
-    df = pages
-    if repartition:
-        df = df.repartition(repartition, F.xxhash64("url"))
-    schema = EXTRACT_WITH_PARTITION_SCHEMA if with_partition_info else EXTRACTED_SCHEMA
-    return df.mapInPandas(
-        lambda it: _extract_batches(it, with_partition_info), schema=schema
-    )
+    return pages.mapInPandas(_extract_parse_batches, schema=FUSED_SCHEMA)
 
 
 SPANS_SCHEMA = (
@@ -179,28 +107,24 @@ def _span_batches(batches):
         )
 
 
-def content_spans(pages: DataFrame, repartition: int | None = None) -> DataFrame:
+def content_spans(pages: DataFrame) -> DataFrame:
     """pages → (url, block_no, span_start, span_end, n_words,
     link_density, is_content): the char-offset map of the boilerpipe
     block segmentation over the DECODED html string — the north-rule
     "extracted spans per document" surface. Consumers slice
     ``decoded_html[span_start:span_end]`` to recover each block's
     original-markup region; content text = content blocks' words in
-    block order (pinned equal to extract_text's output in tests).
-    Same scale shape as extract_text: one mapInPandas crossing,
-    shuffle-free unless ``repartition`` is requested. PDF payloads
-    emit no rows (char spans are an HTML-branch concept)."""
-    df = pages
-    if repartition:
-        df = df.repartition(repartition, F.xxhash64("url"))
-    return df.mapInPandas(_span_batches, schema=SPANS_SCHEMA)
+    block order (pinned equal to extract_main_content in tests).
+    Same scale shape as extract_parse: one shuffle-free mapInPandas
+    crossing. PDF payloads emit no rows (char spans are an HTML-branch
+    concept)."""
+    return pages.mapInPandas(_span_batches, schema=SPANS_SCHEMA)
 
 
 __all__ = [
-    "extract_text",
     "extract_parse",
     "content_spans",
     "EXTRACTOR_VERSION",
-    "EXTRACTED_SCHEMA",
+    "FUSED_SCHEMA",
     "SPANS_SCHEMA",
 ]

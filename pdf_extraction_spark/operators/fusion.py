@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .topk import cosine_col, sql_fold_cos
+from .topk import complete_vec_pred, cosine_col, sql_complete_vec, sql_fold_cos
 
 RRF_SCALE = 1_000_000_000  # ppb fixed point for rank reciprocals
 RBO_SCALE = 1_000_000_000
@@ -347,7 +347,7 @@ def mmr_topk(
         raise ValueError("lam must be in [0, 1]")
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     pool_df = (
-        embeddings.filter(F.col(vec_col).isNotNull())
+        embeddings.filter(complete_vec_pred(F.col(vec_col)))
         .select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("v"),
@@ -425,7 +425,7 @@ def sql_mmr_topk(
     rel = sql_fold_cos(vec_col, qlit, 6)
     parts = [
         f"base AS (SELECT {id_col} AS vid, {vec_col} AS v, {rel} AS rel "
-        f"FROM {table} WHERE {vec_col} IS NOT NULL "
+        f"FROM {table} WHERE {sql_complete_vec(vec_col)} "
         f"ORDER BY rel DESC, vid LIMIT {pool})",
         f"s1 AS (SELECT vid, v, rel, round({lam!r}*rel - {om!r}*0.0, 6) AS mmr "
         "FROM base ORDER BY mmr DESC, vid LIMIT 1)",

@@ -1,42 +1,14 @@
-"""Transcript segmentation operator (T1/T2): text → dialogue turns.
+"""Transcript turn operators (T1/T2): fused turns → one row per turn.
 
-A Series→Series Arrow-batched pandas UDF wraps the pure segmentation
-kernel and returns ``array<struct<speaker,text>>`` per document; turns
-then fan out with ``posexplode`` (position = turn order). Stateful
-*within* a document, embarrassingly parallel *across* documents — the
-canonical pandas-UDF shape (SURVEY.md §2.3 T1).
+Segmentation itself runs inside the fused extraction UDF
+(operators.extract.extract_parse), which returns
+``array<struct<speaker,text>>`` per document; turns then fan out here
+with ``posexplode`` (position = turn order). Stateful *within* a
+document, embarrassingly parallel *across* documents (SURVEY.md §2.3 T1).
 """
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
-from ..kernels.transcript import parse_transcript
-
-TURNS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("speaker", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-)
-
-
-@pandas_udf(TURNS_TYPE)
-def parse_turns_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(
-        lambda t: [
-            (d["speaker"], d["text"]) for d in parse_transcript(t or "")[1]
-        ]
-    )
-
-
-def with_turns(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add a ``turns`` array column."""
-    return docs.withColumn("turns", parse_turns_udf(F.col(text_col)))
 
 
 def explode_turns(docs: DataFrame, keep_cols=("url", "warc_ts", "lang")) -> DataFrame:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .topk import cosine_col, cosine_topk
+from .topk import complete_vec_pred, cosine_col, cosine_topk, sql_complete_vec
 
 brute_force_topk = cosine_topk
 
@@ -228,7 +228,9 @@ def assign_cells(emb: DataFrame, centroids, vec_col: str = "embedding") -> DataF
         )
         return pd.Series(res, dtype="Int32")
 
-    return emb.filter(F.col(vec_col).isNotNull()).withColumn("cell", cell_udf(F.col(vec_col)))
+    return emb.filter(complete_vec_pred(F.col(vec_col))).withColumn(
+        "cell", cell_udf(F.col(vec_col))
+    )
 
 
 def ivf_topk(
@@ -316,7 +318,7 @@ def brute_force_topk_batch(
     # rows as one NULL element each (filtered right after) and plans
     # exactly ONE Python stage.
     scored = (
-        emb.filter(F.col(vec_col).isNotNull())
+        emb.filter(complete_vec_pred(F.col(vec_col)))
         .select(F.col(id_col), F.explode_outer(sims_udf(F.col(vec_col))).alias("qs"))
         .filter(F.col("qs").isNotNull())
         .select(id_col, F.col("qs.q_id").alias("q_id"), F.col("qs.sim").alias("similarity"))
@@ -587,7 +589,7 @@ def sql_semantic_dedup(
         f"list_dot_product(e.{vec_col}::DOUBLE[], c.centroid) / "
         f"(sqrt(list_dot_product(e.{vec_col}::DOUBLE[], e.{vec_col}::DOUBLE[])) * "
         f"sqrt(list_dot_product(c.centroid, c.centroid))) END AS sim "
-        f"FROM {emb_rel} e, {cent_rel} c WHERE e.{vec_col} IS NOT NULL), "
+        f"FROM {emb_rel} e, {cent_rel} c WHERE {sql_complete_vec('e.' + vec_col)}), "
         "assign AS (SELECT vid, cell FROM (SELECT vid, cell, "
         "row_number() OVER (PARTITION BY vid ORDER BY sim DESC, cell) AS rk FROM s) "
         "WHERE rk = 1), "
@@ -787,7 +789,7 @@ def pq_encode(
     m, cb = _codebook_df(spark, codebook)
     ds = dim // m
     cand = (
-        emb.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
+        emb.filter(complete_vec_pred(F.col(vec_col)) & (F.size(vec_col) == dim))
         .select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
         .join(F.broadcast(cb))
         .select(
@@ -883,7 +885,7 @@ def sql_pq_ctes(
     return (
         f"cand AS (SELECT e.{id_col} AS vid, c.sub, c.cell, {fold} AS d "
         f"FROM {emb_rel} e, {cb_rel} c "
-        f"WHERE e.{vec_col} IS NOT NULL AND len(e.{vec_col}) = {dim}), "
+        f"WHERE {sql_complete_vec('e.' + vec_col)} AND len(e.{vec_col}) = {dim}), "
         "best AS (SELECT vid, sub, cell FROM (SELECT vid, sub, cell, "
         "row_number() OVER (PARTITION BY vid, sub ORDER BY d, cell) AS rk "
         "FROM cand) WHERE rk = 1), "

@@ -32,18 +32,35 @@ def norm_col(a: Column) -> Column:
     return F.sqrt(dot_col(a, a))
 
 
+def complete_vec_pred(col: Column) -> Column:
+    """True iff the vector is non-NULL and has no NULL component — the
+    presence gate of the embedding operators. A NULL component voids
+    the vector like a NULL vector: left alone, the numpy kernels read it
+    as NaN while DuckDB's list_dot_product raises on it."""
+    return col.isNotNull() & ~F.exists(col, lambda x: x.isNull())
+
+
+def sql_complete_vec(vec_col: str) -> str:
+    """DuckDB twin of :func:`complete_vec_pred`."""
+    return f"({vec_col} IS NOT NULL AND len(list_filter({vec_col}, x -> x IS NULL)) = 0)"
+
+
 def finite_vec_pred(col: Column) -> Column:
-    """True iff the vector is non-NULL and every component is finite.
+    """True iff the vector is non-NULL and every component is non-NULL
+    and finite.
 
     Non-finite embeddings (NaN/±Inf from a broken upstream model shard
     — a real failure mode at corpus scale) are OUTSIDE the similarity
     universe, like NULLs: NaN poisons every norm/dot it touches, and
     the engines' NaN ordering rules differ (Spark sorts NaN above all
     values, DuckDB raises on NaN→int casts), so admitting them breaks
-    cross-engine parity in operator-specific ways. The empty vector is
-    vacuously finite (matches the SQL twin below)."""
+    cross-engine parity in operator-specific ways. A NULL component is
+    tested explicitly: left to three-valued logic, Spark's ``exists``
+    would yield NULL (row dropped) while DuckDB's ``list_bool_or``
+    skips the NULL (row kept). The empty vector is vacuously finite
+    (matches the SQL twin below)."""
     return col.isNotNull() & ~F.exists(
-        col, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
+        col, lambda x: x.isNull() | F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
     )
 
 
@@ -51,8 +68,8 @@ def sql_finite_vec(vec_col: str) -> str:
     """DuckDB twin of :func:`finite_vec_pred` (empty list → vacuously
     finite via the coalesce, matching Spark's exists-over-empty)."""
     return (
-        f"({vec_col} IS NOT NULL AND NOT coalesce(list_bool_or("
-        f"list_transform({vec_col}, x -> isnan(x) OR NOT isfinite(x))), FALSE))"
+        f"({vec_col} IS NOT NULL AND NOT coalesce(list_bool_or(list_transform("
+        f"{vec_col}, x -> x IS NULL OR isnan(x) OR NOT isfinite(x))), FALSE))"
     )
 
 

@@ -22,19 +22,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels.extract import EXTRACTOR_VERSION
-from ..operators.extract import _extract_parse_batches
+from ..operators.extract import FUSED_SCHEMA, _extract_parse_batches
 
 LINEAGE_SCHEMA = (
     "snapshot_id long, partition_id int, doc_count long, bytes long, "
     "extractor_version string, wall_time_s double"
 )
 
-_FUSED_LINEAGE_SCHEMA = (
-    "url string, warc_ts timestamp, title string, text string, lang string, "
-    "doc_type string, payload_bytes long, "
-    "turns array<struct<speaker:string,text:string>>, "
-    "partition_id int, extract_wall_s double"
-)
+_FUSED_LINEAGE_SCHEMA = FUSED_SCHEMA + ", partition_id int, extract_wall_s double"
 
 
 def _extract_with_partition(batches):

@@ -259,6 +259,9 @@ def _adversarial_embeddings():
         (203, [-float("inf")] + base[1:], 0),           # -inf component
         (204, [5e-39] * 64, 1),                         # float32 denormals
         (205, [3e38] * 64, 2),                          # near float32 max
+        # a NULL component: both engines drop the row (finite_vec_pred
+        # tests it explicitly instead of leaving it to 3-valued logic)
+        (206, base[:63] + [None], 1),
     ]
     return rows
 

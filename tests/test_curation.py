@@ -461,6 +461,29 @@ class TestDecontamination:
         )
         _compare(out, _con(), sql)
 
+    def test_cross_engine_case_fold(self, spark):
+        """İ and a word-final Σ: Spark's lower() gives i̇ and ς, so the
+        hash prefilter must fold them exactly like the exact recheck
+        and the DuckDB twin, or the doc is never rechecked."""
+        from pdf_extraction_spark.operators.curation import (
+            flag_contaminated,
+            sql_flag_contaminated,
+        )
+        import __spark_entry__ as e
+
+        docs = [(0, "İSTANBUL ΟΔΟΣ market report"), (1, "unrelated plain words here")]
+        evals = [(0, "istanbul οδοσ market")]
+        docs_df = spark.createDataFrame(docs, "doc_id long, text string")
+        eval_df = spark.createDataFrame(evals, "eid int, text string")
+        out = flag_contaminated(docs_df, eval_df, n=3)
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+        sql = sql_flag_contaminated(e._sql_values([(t,) for _, t in evals], ["text"]), n=3)
+        _compare(out, con, sql)
+        rows = {r["doc_id"]: r["contaminated"] for r in out.collect()}
+        assert rows == {0: True, 1: False}
+
     def test_semantics(self, docs_df, spark):
         from pdf_extraction_spark.operators.curation import flag_contaminated
 

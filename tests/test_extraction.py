@@ -287,19 +287,21 @@ class TestCharsetAndTitle:
         assert extract_title("<body><p>none</p></body>") == ""
 
     def test_pdf_title_first_line(self):
-        from pdf_extraction_spark.kernels.extract import extract_document_title
+        from pdf_extraction_spark.kernels.extract import extract_document
 
         pdf = build_minimal_pdf(["\nCompany Q3 Call\nMore text"])
-        assert extract_document_title("x.pdf", pdf) == "Company Q3 Call"
+        title, text = extract_document("x.pdf", pdf)
+        assert title == "Company Q3 Call"
+        assert text == extract_document_text("x.pdf", pdf)
 
 
 class TestSparkByteIdentity:
     @pytest.mark.parametrize("n", [40])
     def test_pipeline_matches_kernel(self, spark, n):
-        from pdf_extraction_spark.operators.extract import extract_text
+        from pdf_extraction_spark.operators.extract import extract_parse
         from pdf_extraction_spark.sources.pages import synth_pages_df
 
-        docs = extract_text(synth_pages_df(spark, n)).select("url", "text").collect()
+        docs = extract_parse(synth_pages_df(spark, n)).select("url", "text").collect()
         assert len(docs) == n
         mismatches = []
         for r in docs:
@@ -312,15 +314,30 @@ class TestSparkByteIdentity:
 
     def test_turns_parity(self, spark):
         from pdf_extraction_spark.kernels.transcript import parse_transcript
-        from pdf_extraction_spark.operators.extract import extract_text
-        from pdf_extraction_spark.operators.parse import explode_turns, with_turns
+        from pdf_extraction_spark.operators.extract import extract_parse
+        from pdf_extraction_spark.operators.parse import explode_turns
         from pdf_extraction_spark.sources.pages import synth_pages_df
 
-        docs = extract_text(synth_pages_df(spark, 20))
-        turns = explode_turns(with_turns(docs)).collect()
-        kernel_texts = {}
-        for r in extract_text(synth_pages_df(spark, 20)).collect():
-            kernel_texts[r.url] = parse_transcript(r.text or "")[1]
-        for t in turns:
-            k = kernel_texts[t.url][t.turn_pos]
-            assert (t.speaker, t.content) == (k["speaker"], k["text"])
+        n = 20
+        kernel_turns = {}
+        for i in range(n):
+            row = synth_page_row(i)
+            text = extract_document_text(row["url"], row["html"])
+            kernel_turns[row["url"]] = [
+                (d["speaker"], d["text"]) for d in parse_transcript(text)[1]
+            ]
+        docs = extract_parse(synth_pages_df(spark, n))
+        by_url = {
+            r.url: [(t.speaker, t.text) for t in r.turns]
+            for r in docs.select("url", "turns").collect()
+        }
+        assert by_url == kernel_turns
+        assert any(by_url.values())
+        exploded = sorted(
+            (t.url, t.turn_pos, t.speaker, t.content) for t in explode_turns(docs).collect()
+        )
+        assert exploded == sorted(
+            (url, pos, speaker, text)
+            for url, turns in kernel_turns.items()
+            for pos, (speaker, text) in enumerate(turns)
+        )

@@ -148,6 +148,21 @@ def test_extraction_has_single_python_crossing(spark):
     assert _plan(real).count("MapInPandas") == 1
 
 
+@pytest.mark.parametrize("path", ["extract_with_lineage", "turns_table"])
+def test_ingest_and_rag_extraction_single_python_crossing(spark, path):
+    """The extraction paths the ingest job (plans.lineage) and the RAG
+    fact table (plans.pipeline) run: on a table-scan input, exactly ONE
+    fused MapInPandas and no per-column Python UDF stage."""
+    from pdf_extraction_spark.plans.lineage import extract_with_lineage
+    from pdf_extraction_spark.plans.pipeline import turns_table
+    from pdf_extraction_spark.sources.pages import read_pages
+
+    build = {"extract_with_lineage": extract_with_lineage, "turns_table": turns_table}[path]
+    p = _plan(build(read_pages(spark, f"{SF}/documents.parquet").limit(0)))
+    assert p.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+
+
 def test_embedding_lsh_single_python_crossing(spark):
     """The reworked LSH path: the pandas-UDF sign sketch runs ONCE
     (eager cache, minhash contract) and every one of the relational

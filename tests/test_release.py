@@ -64,6 +64,22 @@ def test_submanifests_merge_to_whole(spark, docs):
     assert _rows(merged) == _rows(shard_manifest(docs, n_shards=8))
 
 
+def test_manifest_merge_query_keeps_negative_ids(spark, docs, tmp_path):
+    """The manifest_merge query splits the corpus by doc_id mod 3; a
+    negative id must land in one part (pmod), not in none (``%`` keeps
+    the sign), or the fold silently loses rows."""
+    import __spark_entry__ as e
+
+    signed = docs.withColumn(
+        "doc_id", F.when(F.col("doc_id") % 4 == 1, -F.col("doc_id")).otherwise(F.col("doc_id"))
+    )
+    signed.write.parquet(str(tmp_path / "documents.parquet"))
+    whole = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    assert whole.filter(F.col("doc_id") < 0).count() > 0
+    merged = e.queries()["manifest_merge"](spark, str(tmp_path))
+    assert _rows(merged) == _rows(shard_manifest(whole, n_shards=16))
+
+
 def test_empty_part_is_identity_of_the_fold(spark, docs):
     """An increment with zero docs manifests to zero rows and folding
     it in changes nothing — the fold's identity element (the

@@ -111,7 +111,8 @@ class TestJsonl:
     def test_jsonl_roundtrip_byte_identity(self, spark, tmp_path):
         """pages → JSONL → pages keeps binary payloads byte-identical
         (base64 bridge) and extraction output unchanged."""
-        from pdf_extraction_spark.operators.extract import extract_text
+        from pdf_extraction_spark.kernels.extract import extract_document_text
+        from pdf_extraction_spark.operators.extract import extract_parse
         from pdf_extraction_spark.sources.pages import (
             read_pages_jsonl,
             synth_pages_df,
@@ -130,6 +131,10 @@ class TestJsonl:
             assert bytes(r["html"]) == bytes(orig[url]["html"])
             assert r["warc_ts"] == orig[url]["warc_ts"]
 
-        a = {r["url"]: r["text"] for r in extract_text(pages).collect()}
-        b = {r["url"]: r["text"] for r in extract_text(back).collect()}
-        assert a == b
+        expect = {
+            url: extract_document_text(url, bytes(r["html"])) for url, r in orig.items()
+        }
+        a = {r["url"]: r["text"] for r in extract_parse(pages).select("url", "text").collect()}
+        b = {r["url"]: r["text"] for r in extract_parse(back).select("url", "text").collect()}
+        assert a == expect
+        assert b == expect
