@@ -5412,8 +5412,8 @@ def oracle_sql() -> dict[str, str]:
         "manifest_merge": sql_shard_manifest(n_shards=16),
         "compaction_plan": sql_compaction_plan(
             "SELECT source || '-' || CAST(doc_id % 7 AS VARCHAR) AS file_id, "
-            "sum(coalesce(octet_length(encode(text)), 0)) AS bytes "
-            "FROM documents GROUP BY 1",
+            "CAST(sum(coalesce(octet_length(encode(text)), 0)) AS BIGINT) "
+            "AS bytes FROM documents GROUP BY 1",
             target_bytes=16000,
         ),
         "mixture_plan": sql_mixture_plan(

@@ -1152,7 +1152,7 @@ def flag_contaminated(
        hashed eval set. Before this prefilter the corpus scan allocated
        an ~n-word string per gram; that garbage, not the (tiny, 28 MB
        at 1.2M docs) shuffle, made wall time grow 12.9× for 10× input
-       (BENCH/curation_sf1.json round 3). Eval sets are small by
+       (BENCH/BASELINE.md, round 3). Eval sets are small by
        construction, so the hashed eval grams broadcast at 8
        bytes/gram.
     2. **Exact string recheck on candidates only**: docs with ≥1 hash

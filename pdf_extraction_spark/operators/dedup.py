@@ -129,7 +129,7 @@ def shingle_hash_df(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Da
     the n token columns directly, so the hot scan allocates no ~60-byte
     gram strings (at 10^6+ docs the gram-string garbage, not the
     shuffle, dominates :func:`shingle_df`-based wall time — measured in
-    BENCH/curation_sf1.json). Join keys are 8 bytes instead of n words.
+    BENCH/BASELINE.md). Join keys are 8 bytes instead of n words.
     Hash equality admits false positives (resolved by an exact string
     recheck on the surviving candidates) and no false negatives: equal
     token tuples always hash equal. Mirrors shingle_df's short-doc rule

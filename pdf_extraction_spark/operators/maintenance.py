@@ -100,14 +100,14 @@ def sql_compaction_plan(
 WITH f AS ({files_select}),
 binned AS (
   SELECT {p}file_id, bytes,
-         coalesce(sum(bytes) OVER ({pb + ' ' if pb else ''}ORDER BY file_id
+         CAST(coalesce(sum(bytes) OVER ({pb + ' ' if pb else ''}ORDER BY file_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           // {target_bytes} AS bin
+           // {target_bytes} AS BIGINT) AS bin
   FROM f
 )
-SELECT {p}file_id, bytes, bin,
+SELECT {p}file_id, CAST(bytes AS BIGINT) AS bytes, bin,
        count(*) OVER ({pbin}) AS bin_files,
-       sum(bytes) OVER ({pbin}) AS bin_bytes
+       CAST(sum(bytes) OVER ({pbin}) AS BIGINT) AS bin_bytes
 FROM binned
 """
 
@@ -245,9 +245,10 @@ def sql_mixture_plan(
     return (
         "WITH "
         + ", ".join(parts)
-        + " SELECT source, avail AS avail_tokens, alloc AS alloc_tokens, "
-        "CASE WHEN avail > 0 THEN alloc * 1000000 // avail ELSE 0 END "
-        f"AS rate_ppm FROM a{n_rounds} ORDER BY source"
+        + " SELECT source, CAST(avail AS BIGINT) AS avail_tokens, "
+        "CAST(alloc AS BIGINT) AS alloc_tokens, "
+        "CAST(CASE WHEN avail > 0 THEN alloc * 1000000 // avail ELSE 0 END "
+        f"AS BIGINT) AS rate_ppm FROM a{n_rounds} ORDER BY source"
     )
 
 
@@ -392,10 +393,10 @@ def sql_temperature_mix(
     )
     return (
         "WITH " + ", ".join(parts)
-        + " SELECT source, avail AS avail_tokens, weight, "
-        "CASE WHEN (SELECT w_tot FROM t) = 0 THEN 0 "
-        "ELSE weight * 1000 // (SELECT w_tot FROM t) END AS share_pm, "
-        f"{alloc} AS alloc_tokens, "
-        f"CASE WHEN avail > 0 THEN ({alloc}) * 1000000 // avail "
-        f"ELSE 0 END AS rate_ppm FROM w{k} ORDER BY source"
+        + " SELECT source, CAST(avail AS BIGINT) AS avail_tokens, weight, "
+        "CAST(CASE WHEN (SELECT w_tot FROM t) = 0 THEN 0 "
+        "ELSE weight * 1000 // (SELECT w_tot FROM t) END AS BIGINT) AS share_pm, "
+        f"CAST({alloc} AS BIGINT) AS alloc_tokens, "
+        f"CAST(CASE WHEN avail > 0 THEN ({alloc}) * 1000000 // avail "
+        f"ELSE 0 END AS BIGINT) AS rate_ppm FROM w{k} ORDER BY source"
     )

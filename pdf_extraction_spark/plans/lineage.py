@@ -3,11 +3,16 @@
 The input is processed in **buckets** keyed by ``pmod(xxhash64(url), B)``
 — the sandbox stand-in for Iceberg snapshot/partition batches (on a real
 deployment ``snapshot_id`` comes from the Iceberg table; here it
-identifies the input fingerprint). Completion of a bucket is recorded in
-the ``lineage`` table only *after* its output commits, so a job killed
-mid-run resumes by anti-joining pending buckets against lineage —
-completed buckets are never recomputed, partial buckets are overwritten
-idempotently (dynamic partition overwrite).
+identifies the input fingerprint). :func:`commit_bucket` is the one
+commit protocol, shared by the batch loop here (key ``bucket``) and the
+streaming sink (key ``batch_id``): write the bucket's docs partition
+(per-write dynamic overwrite, so a half-written bucket from a killed run
+is replaced idempotently), read back only that partition with the known
+schema, then append its lineage rows. The lineage row IS the commit
+marker: a killed run resumes by skipping the buckets
+:func:`completed_buckets` lists — completed buckets are never
+recomputed. A bucket with no rows writes no lineage row, so a resumed
+run re-runs it as an empty job.
 
 Lineage rows (FIXTURES.md §4):
 ``(snapshot_id, partition_id, doc_count, bytes, extractor_version,
@@ -81,6 +86,27 @@ def completed_buckets(spark: SparkSession, lineage_path: str) -> set:
         return set()
 
 
+def commit_bucket(
+    pages: DataFrame, docs_path: str, lineage_path: str, key: str, value: int,
+    fail_after_docs: bool = False,
+) -> None:
+    """Extract ``pages`` into the ``{key}={value}`` docs partition, then
+    append the lineage rows of what actually landed on disk.
+    ``fail_after_docs`` raises between the two commits (test hook)."""
+    (
+        extract_with_lineage(pages).withColumn(key, F.lit(value).cast("long"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy(key).parquet(docs_path)
+    )
+    if fail_after_docs:
+        raise RuntimeError(f"injected failure after {key} {value} output, before lineage commit")
+    committed = (
+        pages.sparkSession.read.schema(f"{_FUSED_LINEAGE_SCHEMA}, {key} long")
+        .parquet(docs_path).filter(F.col(key) == value)
+    )
+    lineage_of(committed, snapshot_id=value).write.mode("append").parquet(lineage_path)
+
+
 def run_checkpointed_extraction(
     spark: SparkSession,
     pages: DataFrame,
@@ -91,9 +117,10 @@ def run_checkpointed_extraction(
     """Extract ``pages`` bucket-by-bucket with resume.
 
     Output layout: ``{out_dir}/docs`` parquet partitioned by ``bucket``;
-    ``{out_dir}/lineage`` parquet. Returns run stats. ``fail_bucket``
-    injects a failure after that bucket's compute (test hook for the
-    kill-resume fixture).
+    ``{out_dir}/lineage`` parquet. Returns run stats; ``total_docs`` is
+    the lineage table's ``doc_count`` sum. ``fail_bucket`` injects a
+    failure after that bucket's docs commit, before its lineage commit
+    (test hook for the kill-resume fixture).
     """
     docs_path = os.path.join(out_dir, "docs")
     lineage_path = os.path.join(out_dir, "lineage")
@@ -122,32 +149,21 @@ def run_checkpointed_extraction(
     staged = spark.read.parquet(staged_path)
 
     processed = []
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     for b in range(n_buckets):
         if b in done:
             continue
         subset = staged.filter(F.col("bucket") == b).drop("bucket")
-        extracted = extract_with_lineage(subset).withColumn("bucket", F.lit(b))
-        # 1) commit output for this bucket — ONE extraction pass; the
-        #    partition_id/wall columns ride along so lineage can be
-        #    derived from the committed data itself (idempotent: dynamic
-        #    overwrite replaces a half-written bucket from a killed run)
-        (
-            extracted.write.mode("overwrite").partitionBy("bucket").parquet(docs_path)
-        )
-        if fail_bucket is not None and b == fail_bucket:
-            raise RuntimeError(f"injected failure after bucket {b} output, before lineage commit")
-        # 2) only then record completion — the lineage row IS the commit
-        #    marker, derived from what actually landed on disk
-        committed = spark.read.parquet(docs_path).filter(F.col("bucket") == b)
-        lineage_of(committed, snapshot_id=b).write.mode("append").parquet(lineage_path)
+        commit_bucket(subset, docs_path, lineage_path, "bucket", b, fail_after_docs=b == fail_bucket)
         processed.append(b)
 
-    n_docs = spark.read.parquet(docs_path).count() if os.path.exists(docs_path) else 0
+    n_docs = (
+        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).agg(F.sum("doc_count")).first()[0]
+        if os.path.exists(lineage_path) else 0
+    )
     return {
         "processed_buckets": processed,
         "skipped_buckets": sorted(done),
-        "total_docs": n_docs,
+        "total_docs": n_docs or 0,
         "lineage_path": lineage_path,
         "docs_path": docs_path,
     }

@@ -1,11 +1,11 @@
 """Exactly-once streaming extraction sink.
 
-plans/lineage.py gives batch extraction its snapshot-bucket commit
-protocol; this is the same protocol for continuously arriving pages:
-``foreachBatch`` + idempotent per-batch dynamic partition overwrite +
-lineage-row-as-commit-marker.
+Each ``foreachBatch`` micro-batch is one bucket of the commit protocol in
+plans/lineage.py: the sink calls the same :func:`commit_bucket` as the
+batch loop, keyed by ``batch_id``, and skips batches that
+:func:`completed_buckets` already lists.
 
-Failure contract (mirrors plans/lineage.py):
+Failure contract:
 - a batch's docs land under ``batch_id=<n>`` via dynamic partition
   overwrite → a retried batch REPLACES its half-written output instead
   of appending duplicates;
@@ -20,21 +20,8 @@ Failure contract (mirrors plans/lineage.py):
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..plans.lineage import extract_with_lineage, lineage_of
-
-
-def committed_batches(spark: SparkSession, lineage_path: str) -> set:
-    if not os.path.exists(lineage_path):
-        return set()
-    try:
-        rows = (
-            spark.read.parquet(lineage_path).select("snapshot_id").distinct().collect()
-        )
-        return {r.snapshot_id for r in rows}
-    except Exception:
-        return set()
+from ..plans.lineage import commit_bucket, completed_buckets
 
 
 def make_extraction_sink(out_dir: str):
@@ -44,30 +31,16 @@ def make_extraction_sink(out_dir: str):
     lineage_path = os.path.join(out_dir, "lineage")
 
     def sink(batch_df: DataFrame, batch_id: int):
-        spark = batch_df.sparkSession
-        if batch_id in committed_batches(spark, lineage_path):
+        if batch_id in completed_buckets(batch_df.sparkSession, lineage_path):
             return  # redelivered after a successful commit — drop
         if not os.path.exists(docs_path) and batch_df.isEmpty():
-            # an empty FIRST-EVER batch would write a schema-less docs
-            # dir that the lineage read-back below cannot infer — skip.
-            # Once docs exist the hazard is gone, so steady-state batches
-            # never pay the extra isEmpty() job (the dir check is free)
+            # an empty FIRST-EVER batch would leave a docs dir with no
+            # data files, which a schema-inferring reader of the output
+            # cannot open — skip it. Once docs exist the hazard is gone,
+            # so steady-state batches never pay the extra isEmpty() job
+            # (the dir check is free)
             return
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        extracted = extract_with_lineage(batch_df).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        (
-            extracted.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(docs_path)
-        )
-        committed = spark.read.parquet(docs_path).filter(
-            F.col("batch_id") == batch_id
-        )
-        lineage_of(committed, snapshot_id=batch_id).write.mode("append").parquet(
-            lineage_path
-        )
+        commit_bucket(batch_df, docs_path, lineage_path, "batch_id", batch_id)
 
     return sink
 

@@ -343,6 +343,61 @@ class TestLineageResume:
         plan = staged.filter(F.col("bucket") == 1)._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "bucket" in plan
 
+    def test_empty_bucket(self, spark, pages, tmp_path):
+        """A bucket with no pages commits as zero rows: the docs read-back
+        uses the known schema, so nothing has to be inferred from an
+        empty partition. It writes no lineage row, so a resumed run
+        re-runs it as an empty job."""
+        from pdf_extraction_spark.kernels.extract import extract_document_text
+        from pdf_extraction_spark.plans.lineage import run_checkpointed_extraction
+
+        bucket = F.pmod(F.xxhash64("url"), F.lit(8))
+        few = pages.filter(bucket != 0).orderBy("url").limit(3).cache()
+        assert few.filter(bucket == 0).count() == 0
+        out = str(tmp_path / "empty_bucket")
+        stats = run_checkpointed_extraction(spark, few, out, n_buckets=8)
+        assert 0 in stats["processed_buckets"]
+        assert stats["total_docs"] == few.count() == 3
+
+        # every bucket survives the later buckets' commits: each write
+        # overwrites only its own partition
+        got = {
+            r.url: r.text
+            for r in spark.read.parquet(stats["docs_path"]).select("url", "text").collect()
+        }
+        want = {
+            r.url: extract_document_text(r.url, bytes(r.html))
+            for r in few.select("url", "html").collect()
+        }
+        assert got == want
+
+        lineage = spark.read.parquet(stats["lineage_path"])
+        assert 0 not in {r.snapshot_id for r in lineage.select("snapshot_id").collect()}
+        # resume re-runs exactly the empty buckets, as empty jobs
+        filled = {r.b for r in few.select(bucket.alias("b")).collect()}
+        again = run_checkpointed_extraction(spark, few, out, n_buckets=8)
+        assert again["processed_buckets"] == sorted(set(range(8)) - filled)
+        assert again["total_docs"] == 3
+        few.unpersist()
+
+    def test_session_overwrite_mode_unchanged(self, spark, pages, tmp_path):
+        """Both commit callers overwrite per write; neither leaves the
+        caller's session switched to dynamic partition overwrite."""
+        from pdf_extraction_spark.plans.lineage import run_checkpointed_extraction
+        from pdf_extraction_spark.streaming.sink import make_extraction_sink
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        original = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "STATIC")
+            before = spark.conf.get(key)
+            run_checkpointed_extraction(spark, pages, str(tmp_path / "batch"), n_buckets=2)
+            assert spark.conf.get(key) == before
+            make_extraction_sink(str(tmp_path / "sink"))(pages, 0)
+            assert spark.conf.get(key) == before
+        finally:
+            spark.conf.set(key, original)
+
 
 class TestStreaming:
     def test_windowed_counts_stream_matches_batch(self, spark, tmp_path):
@@ -525,8 +580,8 @@ class TestStreaming:
         import os as _os
 
         from pdf_extraction_spark.sources.pages import PAGES_SCHEMA
+        from pdf_extraction_spark.plans.lineage import completed_buckets
         from pdf_extraction_spark.streaming.sink import (
-            committed_batches,
             make_extraction_sink,
             run_streaming_extraction_to_parquet,
         )
@@ -542,7 +597,7 @@ class TestStreaming:
         assert n1 == pages.count()
         lineage = spark.read.parquet(_os.path.join(out, "lineage"))
         assert lineage.agg(F.sum("doc_count")).first()[0] == n1
-        done = committed_batches(spark, _os.path.join(out, "lineage"))
+        done = completed_buckets(spark, _os.path.join(out, "lineage"))
         assert done  # at least one committed batch
 
         # redeliver a committed batch straight into the sink → no-op
