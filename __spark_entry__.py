@@ -793,7 +793,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         with_quality_ratios,
     )
     from pdf_extraction_spark.operators.topk import (
-        cosine_col,
         cosine_topk,
         recency_weight_col,
         weighted_score_col,
@@ -930,17 +929,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # -- W5: recency ladder over events vs fixed as_of ----------------------
     def q_recency(spark, sf):
         ev = _events(spark, sf)
-        days = F.datediff(F.lit(AS_OF).cast("date"), F.col("ts").cast("date"))
+        days = f"datediff(CAST('{AS_OF}' AS DATE), CAST(ts AS DATE))"
         return ev.select(
             "event_id",
-            days.alias("days_ago"),
+            F.expr(days).alias("days_ago"),
             recency_weight_col(days).alias("recency_weight"),
         )
 
     # -- W5 full: weighted rerank over events (value/10 as quality proxy) ---
     def q_weighted_rerank(spark, sf):
         ev = _events(spark, sf).withColumn("sim", F.round(F.col("value") / 10.0, 6))
-        ws = weighted_score_col(F.col("sim"), F.col("ts"), AS_OF, F.col("value"))
+        ws = weighted_score_col("sim", "ts", AS_OF, "value")
         return (
             ev.select("event_id", F.round(ws, 6).alias("weighted_score"))
             .orderBy(F.desc("weighted_score"), "event_id")
@@ -1305,7 +1304,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_embed_rerank(spark, sf):
         from pdf_extraction_spark.operators.embed import embed_documents, embed_text
         from pdf_extraction_spark.operators.project import quality_score_col
-        from pdf_extraction_spark.operators.topk import cosine_col, rerank_topk
+        from pdf_extraction_spark.operators.topk import query_cosine, rerank_topk
 
         docs = _docs(spark, sf).withColumn(
             "quality_score",
@@ -1313,12 +1312,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         emb = embed_documents(docs, text_col="text")
         qv = embed_text("spark join window agg")
-        q = F.array(*[F.lit(float(x)) for x in qv])
         scored = emb.select(
             "doc_id",
             F.lit("2024-01-15").alias("date"),
             "quality_score",
-            F.round(cosine_col(F.col("embedding"), q), 6).alias("similarity"),
+            F.round(query_cosine("embedding", qv), 6).alias("similarity"),
         )
         return rerank_topk(scored, AS_OF, k=10, id_cols=("doc_id",))
 

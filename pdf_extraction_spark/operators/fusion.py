@@ -54,7 +54,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .topk import complete_vec_pred, cosine_col, sql_complete_vec, sql_fold_cos
+from .topk import (
+    complete_vec_pred,
+    cosine_col,
+    query_cosine,
+    sql_complete_vec,
+    sql_cosine,
+    sql_fold_cos,
+)
 
 RRF_SCALE = 1_000_000_000  # ppb fixed point for rank reciprocals
 RBO_SCALE = 1_000_000_000
@@ -345,13 +352,12 @@ def mmr_topk(
     """
     if not 0.0 <= lam <= 1.0:
         raise ValueError("lam must be in [0, 1]")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     pool_df = (
         embeddings.filter(complete_vec_pred(F.col(vec_col)))
         .select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("v"),
-            F.round(cosine_col(F.col(vec_col), q), 6).alias("rel"),
+            F.round(query_cosine(vec_col, query_vec), 6).alias("rel"),
         )
         .orderBy(F.desc("rel"), "vid")
         .limit(pool)
@@ -420,9 +426,8 @@ def sql_mmr_topk(
     """DuckDB twin of :func:`mmr_topk` — the same greedy recursion
     unrolled one CTE pair per round, pairwise cosine via the shared
     fold device rounded to 6 dp before the max."""
-    qlit = "[" + ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in query_vec) + "]"
     om = 1.0 - lam
-    rel = sql_fold_cos(vec_col, qlit, 6)
+    rel = sql_cosine(vec_col, query_vec, 6)
     parts = [
         f"base AS (SELECT {id_col} AS vid, {vec_col} AS v, {rel} AS rel "
         f"FROM {table} WHERE {sql_complete_vec(vec_col)} "

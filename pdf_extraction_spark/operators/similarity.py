@@ -19,7 +19,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .topk import complete_vec_pred, cosine_col, cosine_topk, sql_complete_vec
+from .topk import (
+    complete_vec_pred,
+    cosine_col,
+    cosine_topk,
+    query_array_sql,
+    sql_complete_vec,
+    sql_query_vec,
+)
 
 brute_force_topk = cosine_topk
 
@@ -843,7 +850,7 @@ def adc_topk(
     spark = emb.sparkSession
     m, cb = _codebook_df(spark, codebook)
     ds = dim // m
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = F.expr(query_array_sql(query_vec))
     lut = cb.select(
         "sub", "cell", _sub_dist(q, F.col("sub"), F.col("centroid"), ds).alias("qd")
     )
@@ -910,7 +917,7 @@ def sql_adc_topk(cb_rel: str, query_vec, k: int, dim: int = 64, m: int = 8, **kw
     sub — the sql_fold_cos accumulation device)."""
     id_col = kw.get("id_col", "vec_id")
     ds = dim // m
-    qlit = "[" + ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in query_vec) + "]"
+    qlit = sql_query_vec(query_vec)
     qfold = (
         f"list_aggregate(list_transform(list_zip("
         f"({qlit})[c.sub*{ds}+1 : c.sub*{ds}+{ds}], c.centroid), "

@@ -6,11 +6,29 @@ aggregate over doubles — JVM-side, no Python), top-k via
 per-partition heap + driver merge: no full sort, no shuffle of the data,
 scales linearly with input and constant memory per partition).
 
+Two shapes of the same cosine:
+
+- :func:`cosine_col` compares column against column (dedup, similarity,
+  coreset, MMR's selected set), built from Column calls.
+- :func:`query_cosine` compares a column against a literal query vector
+  and is the ONE builder of that shape (cosine_topk, rag_search, MMR's
+  relevance pool, the driver's embed_rerank). It renders the whole
+  similarity as one SQL expression — one ``F.expr``, so building a
+  question costs a handful of Py4J calls instead of several hundred that
+  grow with the dimension. ‖q‖ is folded on the driver with the engine's
+  own left fold (``acc + x*x`` from 0.0, then sqrt): both sides use IEEE
+  doubles without FMA and a correctly rounded square root, and the
+  literal is written with ``repr``, which round-trips, so the similarity
+  is bit-identical to ``cosine_col`` against the same vector as an array.
+
 Rerank (W5) is the reference's weighted score
 0.7·sim + 0.2·recency + 0.1·quality/10 with the recency CASE ladder
 (simple_rag.py:68-102), parameterized by an explicit ``as_of`` (the
-reference uses now(); deviation documented in SURVEY.md §4.4).
+reference uses now(); deviation documented in SURVEY.md §4.4). It is one
+SQL expression too, over column names or SQL expressions.
 """
+
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -79,6 +97,54 @@ def cosine_col(a: Column, b: Column) -> Column:
     return F.when((na == 0.0) | (nb == 0.0), 0.0).otherwise(dot_col(a, b) / (na * nb))
 
 
+def sql_double(x) -> str:
+    """One double as SQL text both engines read back exactly: ``repr``
+    round-trips, and the string cast is correctly rounded in Spark and
+    DuckDB, which both also read 'nan', 'inf' and '-inf'."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def spark_sql_string(s: str) -> str:
+    """A Spark SQL string literal of ``s`` (backslash escapes, the
+    parser's default)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _spark_dot(a: str, b: str, finish: str = "") -> str:
+    """SQL twin of :func:`dot_col` (same fold, same casts), with an
+    optional finish function ``", n -> ..."`` applied to the sum."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        f"0.0D, (acc, x) -> acc + x{finish})"
+    )
+
+
+def query_array_sql(query_vec) -> str:
+    """Spark SQL ``array<double>`` literal of a non-empty query vector."""
+    return f"array({', '.join(map(sql_double, query_vec))})"
+
+
+def query_cosine(vec_col: str, query_vec) -> Column:
+    """``cosine_col(F.col(vec_col), q)`` for a literal query vector ``q``
+    as ONE SQL expression, with ‖q‖ folded on the driver (module
+    docstring: exact). The row's norm is folded once: the guard and the
+    quotient run in the fold's finish function. cosine_col's zero-norm
+    guard makes every row 0.0 when ‖q‖ = 0, NULL vectors included, so
+    that case is the constant; otherwise a NULL vector gives NULL in
+    both forms."""
+    q = [float(x) for x in query_vec]
+    sq = 0.0
+    for x in q:  # the engine's fold: left to right from 0.0
+        sq = sq + x * x
+    qn = math.sqrt(sq)
+    if qn == 0.0:
+        return F.expr("0.0D")
+    v = f"`{vec_col}`"
+    dot = _spark_dot(v, query_array_sql(q))
+    guarded = f", n -> CASE WHEN sqrt(n) = 0.0D THEN 0.0D ELSE {dot} / (sqrt(n) * {sql_double(qn)}) END"
+    return F.expr(_spark_dot(v, v, guarded))
+
+
 def cosine_topk(
     embeddings: DataFrame,
     query_vec,
@@ -89,42 +155,45 @@ def cosine_topk(
 ) -> DataFrame:
     """P9 null filter → cosine vs a literal query vector → top-k.
 
-    ``query_vec``: python list of floats (broadcast as a literal array —
+    ``query_vec``: python list of floats (inlined as a literal array —
     no join needed for a single query)."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = cosine_col(F.col(vec_col), q)
+    sim = query_cosine(vec_col, query_vec)
     if round_digits is not None:
         sim = F.round(sim, round_digits)
     return (
-        embeddings.filter(F.col(vec_col).isNotNull())
+        embeddings.filter(f"`{vec_col}` IS NOT NULL")
         .select(*id_cols, sim.alias("similarity"))
         .orderBy(F.desc("similarity"), *id_cols)
         .limit(k)
     )
 
 
-def recency_weight_col(days_ago: Column) -> Column:
-    """W5 bucket ladder: ≤90 → 1.0, ≤365 → 0.8, ≤730 → 0.6, else 0.4."""
+def _recency_sql(days_ago: str) -> str:
     return (
-        F.when(days_ago <= 90, 1.0)
-        .when(days_ago <= 365, 0.8)
-        .when(days_ago <= 730, 0.6)
-        .otherwise(0.4)
+        f"CASE WHEN {days_ago} <= 90 THEN 1.0D WHEN {days_ago} <= 365 THEN 0.8D "
+        f"WHEN {days_ago} <= 730 THEN 0.6D ELSE 0.4D END"
     )
 
 
-def weighted_score_col(sim: Column, date_col: Column, as_of: str, quality: Column = None) -> Column:
-    """try_cast + null fall-through mirror the kernel's except-branch
-    (simple_rag.py:100-102): an unparseable/missing date yields the bare
-    similarity, and never throws under ANSI mode."""
-    days = F.datediff(F.lit(as_of).cast("date"), date_col.try_cast("date"))
-    qw = (F.coalesce(quality, F.lit(5.0)) / 10.0) if quality is not None else F.lit(0.5)
+def recency_weight_col(days_ago: str) -> Column:
+    """W5 bucket ladder: ≤90 → 1.0, ≤365 → 0.8, ≤730 → 0.6, else 0.4.
+    ``days_ago`` is a column name or SQL expression."""
+    return F.expr(_recency_sql(days_ago))
+
+
+def weighted_score_col(sim: str, date_col: str, as_of: str, quality: str | None = None) -> Column:
+    """``sim``/``date_col``/``quality`` are column names or SQL
+    expressions; the score is one SQL expression. try_cast + null
+    fall-through mirror the kernel's except-branch (simple_rag.py:100-102):
+    an unparseable/missing date yields the bare similarity, and never
+    throws under ANSI mode."""
+    days = f"datediff(CAST({spark_sql_string(as_of)} AS DATE), TRY_CAST({date_col} AS DATE))"
+    qw = f"(coalesce({quality}, 5.0D) / 10.0D)" if quality is not None else "0.5D"
     weighted = (
-        sim * SIM_WEIGHT
-        + recency_weight_col(days) * RECENCY_WEIGHT
-        + qw * QUALITY_WEIGHT
+        f"{sim} * {SIM_WEIGHT!r}D + {_recency_sql(days)} * {RECENCY_WEIGHT!r}D "
+        f"+ {qw} * {QUALITY_WEIGHT!r}D"
     )
-    return F.when(days.isNull(), sim).otherwise(weighted)
+    return F.expr(f"CASE WHEN {days} IS NULL THEN {sim} ELSE {weighted} END")
 
 
 def rerank_topk(
@@ -138,8 +207,8 @@ def rerank_topk(
     round_digits: int | None = 4,
 ) -> DataFrame:
     """W5 rerank + top-k over a similarity-scored frame."""
-    quality = F.col(quality_col) if quality_col in scored.columns else None
-    ws = weighted_score_col(F.col(sim_col), F.col(date_col), as_of, quality)
+    quality = f"`{quality_col}`" if quality_col in scored.columns else None
+    ws = weighted_score_col(f"`{sim_col}`", f"`{date_col}`", as_of, quality)
     if round_digits is not None:
         ws = F.round(ws, round_digits)
     return (
@@ -168,27 +237,38 @@ def assemble_context(
     )
 
 
+def _sql_fold_sum(terms: str) -> str:
+    """DuckDB twin of dot_col's ``aggregate(terms, 0.0, acc + x)``: a
+    left fold from 0.0, so an empty list sums to 0.0 and a NULL term
+    (a NULL component, or the padding list_zip adds when the lengths
+    differ) makes the sum NULL. list_aggregate's 'sum' would skip NULLs
+    and return NULL on an empty list."""
+    return f"list_reduce(list_prepend(0.0::DOUBLE, {terms}), (acc, x) -> acc + x)"
+
+
 def sql_fold_cos(va: str, vb: str, round_digits: int = 4) -> str:
     """DuckDB twin of ``round(cosine_col(a, b), round_digits)`` between
-    two vector expressions — identical left-fold accumulation order over
-    doubles and the same zero-norm → 0.0 guard. The SINGLE source of the
-    oracle-side cosine shape (sql_cosine, sql_embedding_lsh_neardups and
-    sql_semantic_dedup all build on it) so a fold-order or guard fix
-    lands everywhere at once."""
-    dot = (
-        f"list_aggregate(list_transform(list_zip({va}::DOUBLE[], {vb}::DOUBLE[]), "
-        f"p -> p[1] * p[2]), 'sum')"
-    )
-    na = f"sqrt(list_aggregate(list_transform({va}::DOUBLE[], x -> x*x), 'sum'))"
-    nb = f"sqrt(list_aggregate(list_transform({vb}::DOUBLE[], x -> x*x), 'sum'))"
+    two non-NULL vector expressions — identical left-fold accumulation
+    order over doubles, the same NULL propagation and the same zero-norm
+    → 0.0 guard. The SINGLE source of the oracle-side cosine shape
+    (sql_cosine, sql_embedding_lsh_neardups and sql_semantic_dedup all
+    build on it) so a fold-order or guard fix lands everywhere at once."""
+    dot = _sql_fold_sum(f"list_transform(list_zip({va}::DOUBLE[], {vb}::DOUBLE[]), p -> p[1] * p[2])")
+    na = f"sqrt({_sql_fold_sum(f'list_transform({va}::DOUBLE[], x -> x*x)')})"
+    nb = f"sqrt({_sql_fold_sum(f'list_transform({vb}::DOUBLE[], x -> x*x)')})"
     return (
         f"round(CASE WHEN {na} = 0 OR {nb} = 0 THEN 0.0 "
         f"ELSE {dot} / ({na} * {nb}) END, {round_digits})"
     )
 
 
+def sql_query_vec(query_vec) -> str:
+    """DuckDB list literal of a query vector, element by element the
+    doubles :func:`query_cosine` inlines."""
+    return "[" + ", ".join(map(sql_double, query_vec)) + "]"
+
+
 def sql_cosine(vec_expr: str, query_vec, round_digits: int = 4) -> str:
-    """DuckDB oracle twin of cosine_topk's similarity expression —
+    """DuckDB oracle twin of ``round(query_cosine(vec_expr, q))`` —
     the shared fold against a literal query vector."""
-    lit = "[" + ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in query_vec) + "]"
-    return sql_fold_cos(vec_expr, lit, round_digits)
+    return sql_fold_cos(vec_expr, sql_query_vec(query_vec), round_digits)

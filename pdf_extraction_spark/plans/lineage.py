@@ -11,8 +11,9 @@ is replaced idempotently), read back only that partition with the known
 schema, then append its lineage rows. The lineage row IS the commit
 marker: a killed run resumes by skipping the buckets
 :func:`completed_buckets` lists — completed buckets are never
-recomputed. A bucket with no rows writes no lineage row, so a resumed
-run re-runs it as an empty job.
+recomputed. A bucket with no rows writes neither a docs partition nor a
+lineage file, so a resumed run re-runs it as an empty job and
+``lineage/`` does not grow.
 
 Lineage rows (FIXTURES.md §4):
 ``(snapshot_id, partition_id, doc_count, bytes, extractor_version,
@@ -91,7 +92,8 @@ def commit_bucket(
     fail_after_docs: bool = False,
 ) -> None:
     """Extract ``pages`` into the ``{key}={value}`` docs partition, then
-    append the lineage rows of what actually landed on disk.
+    append the lineage rows of what actually landed on disk. An empty
+    bucket writes no partition and so appends nothing to ``lineage/``.
     ``fail_after_docs`` raises between the two commits (test hook)."""
     (
         extract_with_lineage(pages).withColumn(key, F.lit(value).cast("long"))
@@ -100,6 +102,8 @@ def commit_bucket(
     )
     if fail_after_docs:
         raise RuntimeError(f"injected failure after {key} {value} output, before lineage commit")
+    if not os.path.isdir(os.path.join(docs_path, f"{key}={value}")):
+        return  # an empty write leaves no partition: nothing to read back or record
     committed = (
         pages.sparkSession.read.schema(f"{_FUSED_LINEAGE_SCHEMA}, {key} long")
         .parquet(docs_path).filter(F.col(key) == value)

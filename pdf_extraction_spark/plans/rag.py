@@ -10,13 +10,21 @@ REPL prints the assembled context and source listing instead.
 
 The chunks table is any frame with (content, embedding, quality_score,
 date[, company, speaker]) — plans.pipeline + operators.embed produce it.
+
+A question is built on the driver, where every Py4J call costs time.
+The similarity is ``operators.topk.query_cosine`` (the one builder of a
+cosine against a literal query vector: one SQL expression, its query
+norm folded on the driver exactly as the engine folds it) and the rerank
+score is one SQL expression, so a question costs a few dozen calls
+whatever the embedding's dimension. The company filter is SQL text too,
+with the name escaped as a string literal.
 """
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.embed import embed_text
-from ..operators.topk import assemble_context, cosine_col, rerank_topk
+from ..operators.topk import assemble_context, query_cosine, rerank_topk, spark_sql_string
 
 
 def rag_search(
@@ -29,13 +37,11 @@ def rag_search(
 ) -> DataFrame:
     """question → top-k reranked chunks (the reference
     search_documents + weighted rerank, company filter included)."""
-    qv = embed_text(question)
-    q = F.array(*[F.lit(float(x)) for x in qv])
-    scored = chunks.filter(F.col("embedding").isNotNull())
+    scored = chunks.filter("embedding IS NOT NULL")
     if company_filter and "company" in chunks.columns:
-        scored = scored.filter(F.upper(F.col("company")) == company_filter.upper())
+        scored = scored.filter(f"upper(company) = {spark_sql_string(company_filter.upper())}")
     scored = scored.withColumn(
-        "similarity", F.round(cosine_col(F.col("embedding"), q), 6)
+        "similarity", F.round(query_cosine("embedding", embed_text(question)), 6)
     )
     return rerank_topk(scored, as_of, k=k, id_cols=id_cols)
 

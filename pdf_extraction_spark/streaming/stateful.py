@@ -87,7 +87,12 @@ def _update_running(key, pdfs, state: GroupState):
 def running_user_counts(events_stream: DataFrame) -> DataFrame:
     """Custom stateful streaming op: per-user running count + last-seen,
     state kept across micro-batches, evicted after 1 h idle (processing-
-    time timeout)."""
+    time timeout).
+
+    The timeout makes every trigger schedule another batch to check for
+    expired state, so an ``availableNow`` query over this frame never
+    terminates (nor does ``processAllAvailable()`` return): wait for the
+    batches you need, then ``stop()`` the query."""
     return (
         events_stream.groupBy("user_id")
         .applyInPandasWithState(

@@ -315,6 +315,67 @@ def test_adversarial_embedding_twin_parity(spark, emb_adv_dir, emb_adv_con, name
     _assert_twin_parity(spark, emb_adv_dir, emb_adv_con, name)
 
 
+# Hostile QUERY vectors against the hostile embeddings: query_cosine
+# (one SQL expression, norm folded on the driver) must equal cosine_col
+# over the same vector built as an array of literals bit for bit on
+# every row, and the DuckDB twin sql_cosine on every non-NULL vector.
+_QBASE = _adv_vec(3)
+HOSTILE_QUERY_VECS = {
+    "zero": [0.0] * 64,
+    "neg_zero": [-0.0] * 32 + _QBASE[32:],
+    "subnormal": [5e-324] * 64,
+    "norm_overflow": [1e308] * 64,
+    "nan": [float("nan")] + _QBASE[1:],
+    "pos_inf": [float("inf")] + _QBASE[1:],
+    "neg_inf": [-float("inf")] + _QBASE[1:],
+    "empty": [],
+    "dim_short": _QBASE[:63],
+    "dim_long": _QBASE + [0.5],
+}
+
+
+def _same(a, b):
+    if a is None or b is None:
+        return a is b
+    return a == b or (math.isnan(a) and math.isnan(b))
+
+
+@pytest.mark.parametrize("name", list(HOSTILE_QUERY_VECS))
+def test_query_cosine_hostile_query_vectors(spark, emb_adv_dir, emb_adv_con, name):
+    from pyspark.sql import functions as F
+
+    from pdf_extraction_spark.operators.topk import cosine_col, query_cosine, sql_cosine
+
+    q = HOSTILE_QUERY_VECS[name]
+    emb = spark.read.parquet(f"{emb_adv_dir}/embeddings.parquet")
+    as_lits = F.array(*[F.lit(x) for x in q])
+    rows = emb.select(
+        "vec_id",
+        query_cosine("embedding", q).alias("got"),
+        cosine_col(F.col("embedding"), as_lits).alias("want"),
+    ).collect()
+    assert len(rows) == len(_adversarial_embeddings())
+    bad = [(r.vec_id, r.got, r.want) for r in rows if repr(r.got) != repr(r.want)]
+    assert not bad, f"{name}: query_cosine vs cosine_col {bad[:3]}"
+
+    spark_tbl = (
+        emb.filter("embedding IS NOT NULL")
+        .select("vec_id", F.round(query_cosine("embedding", q), 4).alias("similarity"))
+        .orderBy("vec_id")
+        .toArrow()
+    )
+    duck_tbl = emb_adv_con.execute(
+        f"SELECT vec_id, {sql_cosine('embedding', q)} AS similarity FROM embeddings "
+        "WHERE embedding IS NOT NULL ORDER BY vec_id"
+    ).fetch_arrow_table()
+    assert spark_tbl.schema.field("similarity").type == duck_tbl.schema.field("similarity").type
+    ids = spark_tbl.column("vec_id").to_pylist()
+    assert ids == duck_tbl.column("vec_id").to_pylist()
+    pairs = zip(ids, spark_tbl.column("similarity").to_pylist(), duck_tbl.column("similarity").to_pylist())
+    bad = [(i, a, b) for i, a, b in pairs if not _same(a, b)]
+    assert not bad, f"{name}: spark vs duckdb {bad[:3]}"
+
+
 # --- adversarial events/orders sweep ---------------------------------------
 # The time-windowed / sessionization / join-family twins get hostile
 # relational input: NULL timestamps, NULL keys, NULL values, duplicate

@@ -192,5 +192,5 @@ class TestNativeKernelParity:
         from pdf_extraction_spark.operators.topk import recency_weight_col
 
         df = spark.createDataFrame([(d,) for d in [0, 90, 91, 365, 366, 730, 731, 5000]], ["d"])
-        for r in df.select("d", recency_weight_col(F.col("d")).alias("w")).collect():
+        for r in df.select("d", recency_weight_col("d").alias("w")).collect():
             assert r.w == recency_weight(r.d)

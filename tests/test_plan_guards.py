@@ -97,6 +97,53 @@ def test_topk_is_heap_not_global_sort(spark):
     assert "TakeOrderedAndProject" in p
 
 
+def _py4j_commands(fn) -> int:
+    """Py4J commands ``fn()`` sends to the JVM. Py4J's detaches of
+    proxies freed earlier ('m d') are not the call's own and arrive at
+    random points, so they are left out."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return send(self, command)
+
+    gc.collect()
+    ClientServerConnection.send_command = counting
+    try:
+        fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return sum(not c.startswith("m\nd\n") for c in sent)
+
+
+def test_query_vector_plans_in_few_py4j_calls(spark):
+    """A RAG question and a cosine top-k are built on the driver, where
+    every Py4J call costs ~0.1-0.2 ms. The literal query vector is one
+    SQL expression, so building them takes a few dozen calls that do
+    not grow with the dimension (a Column-built fold took ~1000 per
+    question)."""
+    from pdf_extraction_spark.operators.topk import cosine_topk
+    from pdf_extraction_spark.plans.rag import rag_search
+
+    chunks = spark.createDataFrame(
+        [(1, "ACME", "2024-01-01", 5.0, [0.5] * 64)],
+        "chunk_id long, company string, date string, quality_score double, embedding array<double>",
+    )
+    for company in (None, "acme"):
+        rag_search(chunks, "revenue growth", company_filter=company)  # warm
+        n = _py4j_commands(lambda: rag_search(chunks, "revenue growth", company_filter=company))
+        assert n <= 60, f"rag_search (company={company}) sent {n} Py4J commands"
+    emb = chunks.withColumnRenamed("chunk_id", "vec_id")
+    cosine_topk(emb, [0.25] * 8)  # warm
+    by_dim = {d: _py4j_commands(lambda: cosine_topk(emb, [0.25] * d)) for d in (8, 64)}
+    assert by_dim[8] == by_dim[64], by_dim
+
+
 def test_topk_batch_is_bounded_tree_not_window(spark):
     """brute_force_topk_batch must rank via the bounded top-k reduction
     tree (hostcap shape), NOT a row_number window — a window funnels all

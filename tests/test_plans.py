@@ -1,6 +1,7 @@
 """Pipeline, lineage/checkpoint-resume, and streaming tests."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -380,6 +381,21 @@ class TestLineageResume:
         assert again["total_docs"] == 3
         few.unpersist()
 
+    def test_empty_buckets_do_not_grow_lineage(self, spark, pages, tmp_path):
+        """3 pages over 8 buckets leave at least 5 buckets empty; each
+        resume re-runs them, and they must append nothing to lineage/."""
+        from pdf_extraction_spark.plans.lineage import run_checkpointed_extraction
+
+        few = pages.orderBy("url").limit(3).cache()
+        out = str(tmp_path / "resumes")
+        counts = []
+        for _ in range(3):
+            stats = run_checkpointed_extraction(spark, few, out, n_buckets=8)
+            assert stats["total_docs"] == 3
+            counts.append(len(os.listdir(stats["lineage_path"])))
+        few.unpersist()
+        assert counts[0] == counts[1] == counts[2], counts
+
     def test_session_overwrite_mode_unchanged(self, spark, pages, tmp_path):
         """Both commit callers overwrite per write; neither leaves the
         caller's session switched to dynamic partition overwrite."""
@@ -451,7 +467,15 @@ class TestStreaming:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        # ProcessingTimeTimeout keeps an availableNow query running no-data
+        # batches forever: wait for the data batch, then stop it
+        try:
+            deadline = time.time() + 120
+            while not any(p.numInputRows for p in q.recentProgress):
+                assert q.exception() is None and time.time() < deadline
+                time.sleep(0.2)
+        finally:
+            q.stop()
         got = {
             r.user_id: r.n_events
             for r in spark.sql(

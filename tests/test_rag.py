@@ -272,6 +272,21 @@ class TestRagSearch:
         lupin = rag_search(chunks, "margin guidance", k=5, company_filter="lupin").collect()
         assert {r["company"] for r in lupin} == {"LUPIN"}
 
+    def test_company_filter_is_a_literal(self, spark):
+        """The company filter is rendered into SQL text: quotes and
+        backslashes in it must match themselves, not end the literal."""
+        from pdf_extraction_spark.operators.embed import embed_documents
+
+        names = ["DR. REDDY'S", "A\\B", "A'B", "CIPLA"]
+        df = spark.createDataFrame(
+            [(i, c, "2025-03-01", "s", f"revenue growth {i}", 8.0) for i, c in enumerate(names)],
+            "chunk_id long, company string, date string, speaker string, content string, quality_score double",
+        )
+        chunks = embed_documents(df, text_col="content", quality_col="missing")
+        for name in names[:3]:
+            got = rag_search(chunks, "revenue growth", k=5, company_filter=name.lower()).collect()
+            assert [r["company"] for r in got] == [name]
+
     def test_recency_beats_stale(self, chunks):
         # identical question; the 2025 docs carry recency weight 1.0 vs
         # 0.4 for the 2020 one — it should not win the top slot
