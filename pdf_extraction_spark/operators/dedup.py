@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..kernels.textstats import minhash_signature, simhash
+from ..session import per_call_pandas_udf
 
 
 # --- exact (hash-groupBy) ---------------------------------------------------
@@ -767,7 +768,7 @@ def _lsh_pairs_from_sigs(
 
 # --- SimHash ----------------------------------------------------------------
 
-@pandas_udf(T.LongType())
+@per_call_pandas_udf(T.LongType())
 def simhash_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: _to_i64(simhash(t or "")))
 

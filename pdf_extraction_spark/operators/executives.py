@@ -13,9 +13,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..kernels.executives import extract_roster
+from ..session import per_call_pandas_udf
 
 ROSTER_TYPE = T.ArrayType(
     T.StructType(
@@ -24,7 +24,7 @@ ROSTER_TYPE = T.ArrayType(
 )
 
 
-@pandas_udf(ROSTER_TYPE)
+@per_call_pandas_udf(ROSTER_TYPE)
 def roster_udf(contents: pd.Series) -> pd.Series:
     return contents.map(lambda c: list(extract_roster(c or "").items()))
 

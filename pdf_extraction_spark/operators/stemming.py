@@ -27,12 +27,12 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
+from ..session import per_call_pandas_udf
 from .retrieval import _tokens_col
 
 
-@pandas_udf("string")
+@per_call_pandas_udf("string")
 def _stem_udf(words: pd.Series) -> pd.Series:
     from ..kernels.stemmer import porter_stem
 

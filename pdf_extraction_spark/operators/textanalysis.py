@@ -10,9 +10,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..kernels.textstats import detect_language, fingerprint, token_count
+from ..session import per_call_pandas_udf
 from .filters import word_count_col
 
 # regex-token count, native: word runs (with inner apostrophes) or single
@@ -146,17 +146,17 @@ def sql_unigram_entropy(rel: str = "documents", text_expr: str = "text") -> str:
     )
 
 
-@pandas_udf(T.StringType())
+@per_call_pandas_udf(T.StringType())
 def langid_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: detect_language(t or ""))
 
 
-@pandas_udf(T.LongType())
+@per_call_pandas_udf(T.LongType())
 def token_count_udf(texts: pd.Series) -> pd.Series:
     return texts.map(lambda t: token_count(t or ""))
 
 
-@pandas_udf(T.LongType())
+@per_call_pandas_udf(T.LongType())
 def fingerprint_udf(texts: pd.Series) -> pd.Series:
     def f(t):
         v = fingerprint(t or "")
@@ -244,7 +244,7 @@ def with_text_analysis(df: DataFrame, text_col: str = "text") -> DataFrame:
 # Unicode NFC normalization (UAX #15)
 # --------------------------------------------------------------------------
 
-@pandas_udf(T.StringType())
+@per_call_pandas_udf(T.StringType())
 def nfc_normalize_udf(s: pd.Series) -> pd.Series:
     import unicodedata
 
@@ -262,7 +262,7 @@ def nfc_normalize_col(text: Column) -> Column:
     return nfc_normalize_udf(text)
 
 
-@pandas_udf(T.StringType())
+@per_call_pandas_udf(T.StringType())
 def fold_accents_udf(s: pd.Series) -> pd.Series:
     import unicodedata
 

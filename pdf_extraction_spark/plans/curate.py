@@ -21,9 +21,9 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     drop_exact_duplicates,
+    make_minhash_udf,
     minhash_lsh_pairs,
     minhash_near_dup_drops,
-    minhash_signatures,
 )
 from ..operators.extract import extract_parse
 from ..operators.skew import host_col, salted_agg
@@ -51,7 +51,7 @@ def curate_corpus(
     dsir_k: int = None,
 ) -> dict:
     """Returns {'docs': curated frame, 'neardup_pairs': flagged pairs,
-    'stats': per-host rollup, 'sigs': the shared signature frame}.
+    'stats': per-host rollup, 'caches': the two cached frames}.
 
     Optional model-based gates (all off by default, applied after the
     cheap filters): ``min_lm_logprob`` — self-trained bigram LM fluency
@@ -76,15 +76,18 @@ def curate_corpus(
     model is fit on the cleaned corpus): keep the ``dsir_k`` surviving
     docs whose hashed-n-gram distribution best matches the target
     frame's ``text`` column, Gumbel-top-k without replacement.
-    Enabling any gate
-    persists the gate-input frame (several scoring subtrees consume
-    it) and makes the call partially eager (LM training counts the
-    token stream); release everything via ``result['caches']``.
-    Mostly lazy; the MinHash signature pass runs eagerly (cached once,
-    reused by every returned frame). Cache hygiene: once the returned
-    frames are materialized, call ``result['sigs'].unpersist()`` — in a
-    long-lived session composing several corpora the cached signatures
-    would otherwise accumulate until clearCache()."""
+
+    Caching is the same whatever the options: two frames, listed in
+    ``result['caches']``. The first holds the exact-deduplicated,
+    analyzed docs with their MinHash signatures; it is filled eagerly
+    here, so extraction, language ID, the quality stats and MinHash run
+    once per call. The second holds the docs after the near-dup drop and
+    the cheap filters; it fills on first use, and the gates, ``docs`` and
+    ``stats`` all read it. Some gates are partially eager (LM training
+    counts the token stream). Once the returned frames are materialized,
+    unpersist every frame in ``result['caches']``: in a long-lived
+    session composing several corpora they would otherwise accumulate
+    until clearCache()."""
     docs = extract_parse(pages).withColumn("doc_id", F.xxhash64("url"))
 
     if justext:
@@ -122,10 +125,14 @@ def curate_corpus(
         .withColumn("detected_lang", langid_udf(F.col("text")))
     )
 
-    unique = drop_exact_duplicates(analyzed, "text", "doc_id")
-
-    # ONE signature pass (eager-cached) feeds both LSH consumers below
-    sigs = minhash_signatures(unique, "text", "doc_id", num_hashes=minhash_bits)
+    # the one eager cache: the LSH drop set reads the signatures from
+    # several branches of one job, and every later frame reads the docs
+    signed = drop_exact_duplicates(analyzed, "text", "doc_id").withColumn(
+        "sig", make_minhash_udf(minhash_bits, 3)(F.col("text"))
+    ).persist()
+    signed.count()
+    sigs = signed.select("doc_id", "sig")
+    unique = signed.drop("sig")
 
     # pair-free drop set: identical signatures collapse before banding,
     # so boilerplate mega-clusters can neither blow up the candidate
@@ -142,29 +149,17 @@ def curate_corpus(
         unique, "text", "doc_id", num_hashes=minhash_bits, bands=bands, sigs=sigs
     ).filter(F.col("est_jaccard") >= neardup_threshold)
 
+    # cached too: the docs and stats outputs and every gate's scoring
+    # subtree would otherwise each re-run the LSH drop set
     curated = deduped.filter(
         (F.col("token_count") >= min_tokens)
         & (F.col("stopword_ratio") <= max_stopword_ratio)
         & (F.col("detected_lang").isin(list(languages)))
-    )
+    ).persist()
+    caches = [signed, curated]
 
     # optional model-based gates (after the cheap filters so the
     # exploded-token scoring passes run over the smallest frame)
-    gates_on = (
-        min_lm_logprob is not None
-        or classifier is not None
-        or host_cap_k is not None
-        or ppl_keep is not None
-        or semdedup_threshold is not None
-        or dsir_target is not None
-    )
-    if gates_on:
-        # each gate's scoring subtree plus the final docs/stats outputs
-        # would otherwise re-execute the extract/langid/dedup lineage
-        # independently (6-8 full UDF passes) — persist the gate input
-        # once; released with the sigs handle (result['caches'])
-        curated = curated.persist()
-    caches = [sigs] + ([curated] if gates_on else [])
     if min_lm_logprob is not None:
         from ..operators.mlfilter import score_bigram_lm, train_bigram_lm
 
@@ -256,6 +251,5 @@ def curate_corpus(
         "docs": curated,
         "neardup_pairs": neardup_pairs,
         "stats": stats,
-        "sigs": sigs,
         "caches": caches,
     }

@@ -7,10 +7,12 @@ Defaults chosen for the 100 TB design point and safe locally:
 - shuffle partitions sized from parallelism (overridable)
 """
 
+import functools
 import os
 import zipfile
 
 from pyspark.sql import SparkSession
+from pyspark.sql.functions import pandas_udf
 
 # binary payloads are MB-scale; keep Arrow batches small so a batch of
 # html blobs fits comfortably in the Python worker (SURVEY.md §4.2.4)
@@ -54,6 +56,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def per_call_pandas_udf(return_type):
+    """Decorator: like ``pandas_udf(return_type)``, but the UDF is built
+    anew on every call, so it binds to the SparkContext running at that
+    moment. A module-level pandas UDF caches its JVM function together
+    with the first context's accumulator; after ``spark.stop()`` and a
+    new session, every task then fails to report back to the driver
+    ("Failed to update accumulator"); one with a DDL-string type cannot
+    even be defined before a context exists. The wrapper keeps the
+    function's name, so its column reads ``name(arg)``."""
+
+    def wrap(fn):
+        @functools.wraps(fn)
+        def call(*cols):
+            return pandas_udf(fn, return_type)(*cols)
+
+        return call
+
+    return wrap
 
 
 def shuffle_conf_for(

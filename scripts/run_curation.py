@@ -133,10 +133,10 @@ def main(argv=None):
     with open(os.path.join(args.output, "data_card.json"), "w") as f:
         json.dump(card, f, indent=2)
 
-    # cache hygiene: every sink is materialized — release the shared
-    # signature cache and the fan-out cache so a long-lived session
+    # cache hygiene: every sink is materialized — release curate's two
+    # cached frames and the fan-out cache so a long-lived session
     # composing several corpora holds no residual cached frames
-    for frame in out.get("caches", [out["sigs"]]):
+    for frame in out["caches"]:
         frame.unpersist()
     docs.unpersist()
 

@@ -90,9 +90,10 @@ class TestCurate:
 
     def test_cache_hygiene(self, spark, pages):
         """Materialize every returned frame, then release the returned
-        sigs handle → no residual cached frames beyond what the session
+        ``caches`` → no residual cached frames beyond what the session
         already held (long-lived sessions composing several corpora must
-        not leak the signature cache)."""
+        not leak curate's caches). The cache layout does not depend on
+        the options: a gated call returns as many caches."""
         from pdf_extraction_spark.plans.curate import curate_corpus
 
         jsc = spark.sparkContext._jsc
@@ -111,9 +112,50 @@ class TestCurate:
         out["docs"].count()
         out["neardup_pairs"].count()
         out["stats"].count()
-        assert cached_ids() - baseline  # sigs cached in-job
-        out["sigs"].unpersist(blocking=True)
+        assert cached_ids() - baseline  # cached in-job
+        for frame in out["caches"]:
+            frame.unpersist(blocking=True)
         assert not (cached_ids() - baseline)
+        # lazy on purpose: only the layout is compared, nothing runs
+        # beyond the eager fill, which the unpersist below releases
+        gated = curate_corpus(
+            pages, min_tokens=10, languages=("en",), minhash_bits=24, host_cap_k=5
+        )
+        assert len(gated["caches"]) == len(out["caches"])
+        for frame in gated["caches"]:
+            frame.unpersist(blocking=True)
+        assert not (cached_ids() - baseline)
+
+    def test_outputs_read_the_cache_not_extraction(self, spark, pages):
+        """``docs`` and ``stats`` read curate's cached frames: no Python
+        stage (extraction, langid, MinHash) runs outside an
+        InMemoryTableScan of their executed plans. The walk follows
+        ``children()`` only — an InMemoryTableScan's ``innerChildren``
+        is the cached plan, which does hold the Python stages — and
+        enters the AdaptiveSparkPlan leaf through its current plan."""
+        from pdf_extraction_spark.plans.curate import curate_corpus
+
+        def python_outside_cache(df):
+            found, todo = [], [df._jdf.queryExecution().executedPlan()]
+            while todo:
+                node = todo.pop()
+                name = node.nodeName()
+                if name == "InMemoryTableScan":
+                    continue
+                if name == "AdaptiveSparkPlan":
+                    todo.append(node.executedPlan())
+                    continue
+                if "MapInPandas" in name or "ArrowEvalPython" in name:
+                    found.append(name)
+                kids = node.children()
+                todo.extend(kids.apply(i) for i in range(kids.size()))
+            return found
+
+        out = curate_corpus(pages, min_tokens=10, languages=("en",), minhash_bits=20)
+        for name in ("docs", "stats"):
+            assert not python_outside_cache(out[name]), name
+        for frame in out["caches"]:
+            frame.unpersist()
 
     def test_model_gates_compose(self, spark, pages):
         """The optional LM / classifier / host-cap gates only ever
