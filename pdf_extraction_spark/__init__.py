@@ -25,4 +25,14 @@ Layers:
 - ``streaming`` Structured Streaming wrappers
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+# Every engine UDF is pickled by reference, so each Python worker imports
+# this package before its first task runs: stop later tasks re-reading
+# every zip on the worker path (see _worker). False on the driver.
+if sys.version_info < (3, 13) and "pyspark.worker" in sys.modules:
+    from ._worker import install_zip_cache_fix
+
+    install_zip_cache_fix()

@@ -5,15 +5,28 @@ The input is processed in **buckets** keyed by ``pmod(xxhash64(url), B)``
 deployment ``snapshot_id`` comes from the Iceberg table; here it
 identifies the input fingerprint). :func:`commit_bucket` is the one
 commit protocol, shared by the batch loop here (key ``bucket``) and the
-streaming sink (key ``batch_id``): write the bucket's docs partition
-(per-write dynamic overwrite, so a half-written bucket from a killed run
-is replaced idempotently), read back only that partition with the known
-schema, then append its lineage rows. The lineage row IS the commit
-marker: a killed run resumes by skipping the buckets
-:func:`completed_buckets` lists — completed buckets are never
+streaming sink (key ``batch_id``). It has two halves:
+:func:`write_bucket` writes the bucket's docs partition (per-write
+dynamic overwrite, so a half-written bucket from a killed run is
+replaced idempotently), and :func:`append_lineage` reads back only that
+partition with the known schema and appends its lineage rows. The
+lineage row IS the commit marker: a killed run resumes by skipping the
+buckets :func:`completed_buckets` lists — completed buckets are never
 recomputed. A bucket with no rows writes neither a docs partition nor a
 lineage file, so a resumed run re-runs it as an empty job and
 ``lineage/`` does not grow.
+
+The batch loop writes one bucket ahead: bucket b+1's docs write runs on
+one background thread while the main thread appends bucket b's lineage.
+Lineage appends stay on the main thread, in bucket order, each after its
+own bucket's docs commit, so the marker rule above holds. The write
+thread is wrapped in ``inheritable_thread_target``: a new thread starts
+with no Spark local properties, so without it the write jobs would lose
+the caller's job group, description and tags. On a failure the in-flight
+write finishes before the exception propagates. Each bucket costs two
+jobs (the write, and the single-task read-back + lineage append); a
+fresh run of B buckets costs 2B+2 with staging and the closing
+``total_docs`` sum.
 
 Lineage rows (FIXTURES.md §4):
 ``(snapshot_id, partition_id, doc_count, bytes, extractor_version,
@@ -23,9 +36,12 @@ extraction UDF itself.
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.util import inheritable_thread_target
 
 from ..kernels.extract import EXTRACTOR_VERSION
 from ..operators.extract import FUSED_SCHEMA, _extract_parse_batches
@@ -87,28 +103,37 @@ def completed_buckets(spark: SparkSession, lineage_path: str) -> set:
         return set()
 
 
-def commit_bucket(
-    pages: DataFrame, docs_path: str, lineage_path: str, key: str, value: int,
-    fail_after_docs: bool = False,
-) -> None:
-    """Extract ``pages`` into the ``{key}={value}`` docs partition, then
-    append the lineage rows of what actually landed on disk. An empty
-    bucket writes no partition and so appends nothing to ``lineage/``.
-    ``fail_after_docs`` raises between the two commits (test hook)."""
+def write_bucket(pages: DataFrame, docs_path: str, key: str, value: int) -> None:
+    """Extract ``pages`` into the ``{key}={value}`` docs partition. An
+    empty bucket writes no partition."""
     (
         extract_with_lineage(pages).withColumn(key, F.lit(value).cast("long"))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy(key).parquet(docs_path)
     )
-    if fail_after_docs:
-        raise RuntimeError(f"injected failure after {key} {value} output, before lineage commit")
-    if not os.path.isdir(os.path.join(docs_path, f"{key}={value}")):
+
+
+def append_lineage(
+    spark: SparkSession, docs_path: str, lineage_path: str, key: str, value: int
+) -> None:
+    """Append the lineage rows of what the ``{key}={value}`` docs partition
+    holds on disk. Only that directory is listed, with the known schema,
+    so a concurrent write of another partition is never seen; one task
+    aggregates it (one row per extract task), in one job."""
+    part = os.path.join(docs_path, f"{key}={value}")
+    if not os.path.isdir(part):
         return  # an empty write leaves no partition: nothing to read back or record
-    committed = (
-        pages.sparkSession.read.schema(f"{_FUSED_LINEAGE_SCHEMA}, {key} long")
-        .parquet(docs_path).filter(F.col(key) == value)
-    )
-    lineage_of(committed, snapshot_id=value).write.mode("append").parquet(lineage_path)
+    committed = spark.read.schema(_FUSED_LINEAGE_SCHEMA).parquet(part)
+    lineage_of(committed.coalesce(1), snapshot_id=value).write.mode("append").parquet(lineage_path)
+
+
+def commit_bucket(
+    pages: DataFrame, docs_path: str, lineage_path: str, key: str, value: int
+) -> None:
+    """Extract ``pages`` into the ``{key}={value}`` docs partition, then
+    append the lineage rows of what actually landed on disk."""
+    write_bucket(pages, docs_path, key, value)
+    append_lineage(pages.sparkSession, docs_path, lineage_path, key, value)
 
 
 def run_checkpointed_extraction(
@@ -150,18 +175,35 @@ def run_checkpointed_extraction(
             .partitionBy("bucket")
             .parquet(staged_path)
         )
-    staged = spark.read.parquet(staged_path)
+    staged = spark.read.schema(
+        StructType(pages.schema.fields + [StructField("bucket", IntegerType())])
+    ).parquet(staged_path)
 
+    todo = [b for b in range(n_buckets) if b not in done]
     processed = []
-    for b in range(n_buckets):
-        if b in done:
-            continue
-        subset = staged.filter(F.col("bucket") == b).drop("bucket")
-        commit_bucket(subset, docs_path, lineage_path, "bucket", b, fail_after_docs=b == fail_bucket)
-        processed.append(b)
+    with ThreadPoolExecutor(1) as writer:  # on exit, waits for the in-flight write
+
+        def write(b):
+            subset = staged.filter(F.col("bucket") == b).drop("bucket")
+            # wrapped here, on the caller's thread, so the write job carries
+            # the caller's local properties (job group, description, tags)
+            return writer.submit(
+                inheritable_thread_target(spark)(write_bucket), subset, docs_path, "bucket", b
+            )
+
+        written = write(todo[0]) if todo else None
+        for b, nxt in zip(todo, todo[1:] + [None]):
+            ahead = write(nxt) if nxt is not None else None
+            written.result()
+            if b == fail_bucket:
+                raise RuntimeError(f"injected failure after bucket {b} output, before lineage commit")
+            append_lineage(spark, docs_path, lineage_path, "bucket", b)
+            processed.append(b)
+            written = ahead
 
     n_docs = (
-        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path).agg(F.sum("doc_count")).first()[0]
+        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+        .coalesce(1).agg(F.sum("doc_count")).first()[0]
         if os.path.exists(lineage_path) else 0
     )
     return {

@@ -4,7 +4,8 @@ Defaults chosen for the 100 TB design point and safe locally:
 - AQE on (runtime coalescing, skew-join splitting)
 - Arrow enabled for pandas-UDF exchange; small Arrow batches because the
   extract UDF carries MB-scale binary payloads per row
-- shuffle partitions sized from parallelism (overridable)
+- shuffle partitions sized from local parallelism (overridable)
+- under spark-submit, the submitted --master and --conf stand
 """
 
 import functools
@@ -26,23 +27,29 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local: ~1 shuffle partition per core; on a real cluster this is
-        # sized to keep post-shuffle partitions in the 64–256 MB range
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
-        if n == "*":
-            shuffle_partitions = cpus
-        elif "," in n:  # local-cluster[n_exec, cores_per_exec, mem_mb]
-            n_exec, cores_per = n.split(",")[:2]
-            shuffle_partitions = max(int(n_exec) * int(cores_per), 1)
-        else:
-            shuffle_partitions = max(int(n), 1)
+    conf = {}
+    # under spark-submit (it started the JVM and set PYSPARK_GATEWAY_PORT)
+    # the submitted --master and --conf stand unless a master is passed
+    if master is not None or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = master or f"local[{cpus}]"
+        conf["spark.master"] = master
+        if shuffle_partitions is None:
+            # local: ~1 shuffle partition per core; on a real cluster this is
+            # sized to keep post-shuffle partitions in the 64–256 MB range
+            n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
+            if n == "*":
+                shuffle_partitions = cpus
+            elif "," in n:  # local-cluster[n_exec, cores_per_exec, mem_mb]
+                n_exec, cores_per = n.split(",")[:2]
+                shuffle_partitions = max(int(n_exec) * int(cores_per), 1)
+            else:
+                shuffle_partitions = max(int(n), 1)
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(map=conf)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -43,12 +43,11 @@ def main(argv=None):
     if not args.input and not args.synth:
         parser.error("one of --input / --synth is required")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("pdf_extraction_spark.curate").getOrCreate()
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+    from pdf_extraction_spark.session import get_spark
+
+    spark = get_spark(app_name="pdf_extraction_spark.curate")
 
     from pdf_extraction_spark.operators.curation import (
         flag_contaminated,

@@ -386,6 +386,37 @@ class TestLineageResume:
         plan = staged.filter(F.col("bucket") == 1)._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "bucket" in plan
 
+    def test_two_jobs_per_bucket_all_in_the_callers_group(self, spark, pages, tmp_path):
+        """Each bucket is one docs write plus one lineage job, and the run
+        adds staging and the total: 2B+2. The writes run on a background
+        thread; a write job that lost the caller's local properties would
+        be missing from the group. A failed run leaves no job running."""
+        from pdf_extraction_spark.plans.lineage import LINEAGE_SCHEMA, run_checkpointed_extraction
+
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group = f"lineage-jobs-{tmp_path.name}"  # unique per run of the test
+        sc.setJobGroup(group, "run_checkpointed_extraction job count")
+        try:
+            stats = run_checkpointed_extraction(spark, pages, str(tmp_path / "ok"), n_buckets=4)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = tracker.getJobIdsForGroup(group)
+            with pytest.raises(RuntimeError, match="injected failure"):
+                run_checkpointed_extraction(
+                    spark, pages, str(tmp_path / "killed"), n_buckets=4, fail_bucket=2
+                )
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            active = tracker.getActiveJobsIds()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+
+        filled = spark.read.schema(LINEAGE_SCHEMA).parquet(stats["lineage_path"])
+        n_filled = filled.select("snapshot_id").distinct().count()
+        assert stats["processed_buckets"] == [0, 1, 2, 3] and n_filled == 4
+        assert len(jobs) == 2 * n_filled + 2
+        assert active == []
+
     def test_empty_bucket(self, spark, pages, tmp_path):
         """A bucket with no pages commits as zero rows: the docs read-back
         uses the known schema, so nothing has to be inferred from an
@@ -692,8 +723,18 @@ class TestStreaming:
         assert n == pages.count()
 
 
+@pytest.fixture
+def keep_shuffle_partitions(spark):
+    """scripts/run_curation.py's get_spark() getOrCreates the test session
+    and sizes its shuffle partitions from the host's cores: put the test
+    session's value back for the tests that follow."""
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", n)
+
+
 class TestCurationCli:
-    def test_run_curation_end_to_end(self, spark, tmp_path):
+    def test_run_curation_end_to_end(self, spark, tmp_path, keep_shuffle_partitions):
         """scripts/run_curation.py main() in-process (getOrCreate reuses
         the test session): synth pages → curated, packed, partitioned
         corpus + pack/host stats on disk."""
@@ -758,7 +799,7 @@ class TestCorpusCard:
         card = corpus_card(docs, id_col="page_id")
         assert card["n_docs"] == 120
 
-    def test_card_written_by_cli(self, spark, tmp_path):
+    def test_card_written_by_cli(self, spark, tmp_path, keep_shuffle_partitions):
         import importlib.util
         import json
         import os as _os
