@@ -140,7 +140,9 @@ def table_profile(df: DataFrame, columns: list[str]) -> DataFrame:
 
 def sql_table_profile(rel: str, columns: list[str]) -> str:
     """DuckDB twin of :func:`table_profile` — identical per-column
-    aggregates, top-3 order and rendering."""
+    aggregates, top-3 order and rendering. Like the Spark melt, the
+    top-3 groups by the rendered string, so values that compare equal
+    but render apart (-0.0 and 0.0) count apart in both engines."""
     blocks = []
     for c in columns:
         blocks.append(
@@ -153,11 +155,10 @@ def sql_table_profile(rel: str, columns: list[str]) -> str:
             f"(SELECT CAST(min({c}) AS VARCHAR) FROM {rel}) AS min_str, "
             f"(SELECT CAST(max({c}) AS VARCHAR) FROM {rel}) AS max_str, "
             "(SELECT coalesce(array_to_string(list_transform("
-            "list_sort(list({'nc': -c, 'vs': CAST(v AS VARCHAR), "
-            "'c': c}))[1:3], "
+            "list_sort(list({'nc': -c, 'vs': v, 'c': c}))[1:3], "
             "s -> s.vs || ':' || CAST(s.c AS VARCHAR)), ','), '') FROM "
-            f"(SELECT {c} AS v, CAST(count(*) AS BIGINT) AS c FROM {rel} "
-            f"WHERE {c} IS NOT NULL GROUP BY {c})) AS top_values"
+            f"(SELECT CAST({c} AS VARCHAR) AS v, CAST(count(*) AS BIGINT) AS c "
+            f"FROM {rel} WHERE {c} IS NOT NULL GROUP BY 1)) AS top_values"
         )
     return " UNION ALL ".join(blocks)
 

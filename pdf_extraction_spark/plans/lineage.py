@@ -8,13 +8,22 @@ commit protocol, shared by the batch loop here (key ``bucket``) and the
 streaming sink (key ``batch_id``). It has two halves:
 :func:`write_bucket` writes the bucket's docs partition (per-write
 dynamic overwrite, so a half-written bucket from a killed run is
-replaced idempotently), and :func:`append_lineage` reads back only that
-partition with the known schema and appends its lineage rows. The
+replaced idempotently) and returns the lineage rows its extraction
+tasks reported, and :func:`append_lineage` appends those rows. The
 lineage row IS the commit marker: a killed run resumes by skipping the
 buckets :func:`completed_buckets` lists — completed buckets are never
 recomputed. A bucket with no rows writes neither a docs partition nor a
 lineage file, so a resumed run re-runs it as an empty job and
 ``lineage/`` does not grow.
+
+Each extraction task adds its own lineage row to an accumulator that
+:func:`write_bucket` creates for that one write. Spark applies a result
+task's accumulator update once, when the task succeeds, so after the
+write returns the rows describe exactly the tasks whose output the
+write committed; a failed or retried attempt adds nothing. The docs
+table therefore holds only the extracted columns (``FUSED_SCHEMA`` plus
+the partition key), and the lineage frame is built on the driver from
+pandas through Arrow, with no Python task and no read-back of the docs.
 
 The batch loop writes one bucket ahead: bucket b+1's docs write runs on
 one background thread while the main thread appends bucket b's lineage.
@@ -24,20 +33,22 @@ thread is wrapped in ``inheritable_thread_target``: a new thread starts
 with no Spark local properties, so without it the write jobs would lose
 the caller's job group, description and tags. On a failure the in-flight
 write finishes before the exception propagates. Each bucket costs two
-jobs (the write, and the single-task read-back + lineage append); a
-fresh run of B buckets costs 2B+2 with staging and the closing
-``total_docs`` sum.
+jobs (the docs write, and the lineage append); a fresh run of B buckets
+costs 2B+2 with staging and the closing ``total_docs`` sum.
 
 Lineage rows (FIXTURES.md §4):
 ``(snapshot_id, partition_id, doc_count, bytes, extractor_version,
-wall_time_s)`` — one per Spark partition per bucket, measured inside the
-extraction UDF itself.
+wall_time_s)`` — one per extraction task with output per bucket, timed
+inside the extraction UDF itself.
 """
 
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
+import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
@@ -51,89 +62,85 @@ LINEAGE_SCHEMA = (
     "extractor_version string, wall_time_s double"
 )
 
-_FUSED_LINEAGE_SCHEMA = FUSED_SCHEMA + ", partition_id int, extract_wall_s double"
+
+class _TaskRows(AccumulatorParam):
+    """Accumulates a list of ``(partition_id, doc_count, bytes,
+    wall_time_s)`` tuples, one per extraction task."""
+
+    def zero(self, value):
+        return []
+
+    def addInPlace(self, rows, more):
+        rows.extend(more)
+        return rows
 
 
-def _extract_with_partition(batches):
+def _counted_batches(rows, batches):
     from pyspark import TaskContext
 
-    ctx = TaskContext.get()
-    pid = ctx.partitionId() if ctx else -1
     t0 = time.perf_counter()
+    n = size = 0
     for out in _extract_parse_batches(batches):
-        out["partition_id"] = pid
-        out["extract_wall_s"] = time.perf_counter() - t0
+        n += len(out)
+        size += int(out["payload_bytes"].sum())
         yield out
+    if n:
+        rows.add([(TaskContext.get().partitionId(), n, size, time.perf_counter() - t0)])
 
 
-def extract_with_lineage(pages: DataFrame) -> DataFrame:
-    """Fused extraction carrying (partition_id, cumulative wall time)."""
-    return pages.mapInPandas(_extract_with_partition, schema=_FUSED_LINEAGE_SCHEMA)
-
-
-def lineage_of(extracted: DataFrame, snapshot_id: int) -> DataFrame:
-    """Aggregate per-partition lineage rows from an extracted frame."""
-    return extracted.groupBy("partition_id").agg(
-        F.count("*").alias("doc_count"),
-        F.sum("payload_bytes").alias("bytes"),
-        F.max("extract_wall_s").alias("wall_time_s"),
-    ).select(
-        F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-        "partition_id",
-        "doc_count",
-        "bytes",
-        F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
-        "wall_time_s",
-    )
+def extract_counted(pages: DataFrame):
+    """Fused extraction (``FUSED_SCHEMA``) whose tasks each report one
+    lineage row. Returns ``(docs, rows)``: once an action over ``docs``
+    succeeds, ``rows.value`` lists one ``(partition_id, doc_count,
+    bytes, wall_time_s)`` per task that produced documents."""
+    rows = pages.sparkSession.sparkContext.accumulator([], _TaskRows())
+    return pages.mapInPandas(partial(_counted_batches, rows), schema=FUSED_SCHEMA), rows
 
 
 def completed_buckets(spark: SparkSession, lineage_path: str) -> set:
     if not os.path.exists(lineage_path):
         return set()
-    try:
-        rows = (
-            spark.read.schema(LINEAGE_SCHEMA)
-            .parquet(lineage_path)
-            .select("snapshot_id")
-            .distinct()
-            .collect()
-        )
-        return {r.snapshot_id for r in rows}
-    except Exception:
-        return set()
+    rows = (
+        spark.read.schema(LINEAGE_SCHEMA)
+        .parquet(lineage_path)
+        .select("snapshot_id")
+        .distinct()
+        .collect()
+    )
+    return {r.snapshot_id for r in rows}
 
 
-def write_bucket(pages: DataFrame, docs_path: str, key: str, value: int) -> None:
-    """Extract ``pages`` into the ``{key}={value}`` docs partition. An
-    empty bucket writes no partition."""
+def write_bucket(pages: DataFrame, docs_path: str, key: str, value: int) -> list:
+    """Extract ``pages`` into the ``{key}={value}`` docs partition and
+    return the lineage rows of the write's tasks. An empty bucket writes
+    no partition and returns no rows."""
+    docs, rows = extract_counted(pages)
     (
-        extract_with_lineage(pages).withColumn(key, F.lit(value).cast("long"))
+        docs.withColumn(key, F.lit(value).cast("long"))
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy(key).parquet(docs_path)
     )
+    return rows.value
 
 
-def append_lineage(
-    spark: SparkSession, docs_path: str, lineage_path: str, key: str, value: int
-) -> None:
-    """Append the lineage rows of what the ``{key}={value}`` docs partition
-    holds on disk. Only that directory is listed, with the known schema,
-    so a concurrent write of another partition is never seen; one task
-    aggregates it (one row per extract task), in one job."""
-    part = os.path.join(docs_path, f"{key}={value}")
-    if not os.path.isdir(part):
-        return  # an empty write leaves no partition: nothing to read back or record
-    committed = spark.read.schema(_FUSED_LINEAGE_SCHEMA).parquet(part)
-    lineage_of(committed.coalesce(1), snapshot_id=value).write.mode("append").parquet(lineage_path)
+def append_lineage(spark: SparkSession, lineage_path: str, value: int, rows: list) -> None:
+    """Append one lineage file holding ``rows`` (from :func:`write_bucket`)
+    as snapshot ``value``, in one job."""
+    if not rows:
+        return  # an empty write ran no task with output: nothing to record
+    frame = pd.DataFrame(sorted(rows), columns=["partition_id", "doc_count", "bytes", "wall_time_s"])
+    frame.insert(0, "snapshot_id", value)
+    frame.insert(4, "extractor_version", EXTRACTOR_VERSION)
+    spark.createDataFrame(frame, LINEAGE_SCHEMA).coalesce(1).write.mode("append").parquet(lineage_path)
 
 
 def commit_bucket(
     pages: DataFrame, docs_path: str, lineage_path: str, key: str, value: int
 ) -> None:
     """Extract ``pages`` into the ``{key}={value}`` docs partition, then
-    append the lineage rows of what actually landed on disk."""
-    write_bucket(pages, docs_path, key, value)
-    append_lineage(pages.sparkSession, docs_path, lineage_path, key, value)
+    append the lineage rows of the tasks that write committed."""
+    rows = write_bucket(pages, docs_path, key, value)
+    append_lineage(pages.sparkSession, lineage_path, value, rows)
 
 
 def run_checkpointed_extraction(
@@ -194,10 +201,10 @@ def run_checkpointed_extraction(
         written = write(todo[0]) if todo else None
         for b, nxt in zip(todo, todo[1:] + [None]):
             ahead = write(nxt) if nxt is not None else None
-            written.result()
+            rows = written.result()
             if b == fail_bucket:
                 raise RuntimeError(f"injected failure after bucket {b} output, before lineage commit")
-            append_lineage(spark, docs_path, lineage_path, "bucket", b)
+            append_lineage(spark, lineage_path, b, rows)
             processed.append(b)
             written = ahead
 

@@ -85,38 +85,6 @@ def per_call_pandas_udf(return_type):
     return wrap
 
 
-def shuffle_conf_for(
-    input_bytes: int,
-    executors: int,
-    cores_per_executor: int = 4,
-    target_partition_bytes: int = 192 * 1024 * 1024,
-) -> dict:
-    """Cluster-sizing arithmetic for a given corpus size — the knobs the
-    100 TB deployment actually turns, as a pure function so the math is
-    testable and the reasoning reviewable:
-
-    - ``spark.sql.shuffle.partitions``: input ÷ target post-shuffle
-      partition size (192 MB default — the 64–256 MB band keeps a
-      partition comfortably in executor memory during sort/agg spill
-      while amortizing per-task overhead), floored at 2× total cores so
-      every core gets work even on small inputs. At 100 TB this lands
-      at ~550k partitions — far above the 32 used locally, which is the
-      point: the number is data-derived, not hardcoded.
-    - ``spark.sql.files.maxPartitionBytes``: scan-side split size, kept
-      at 128 MB (matches typical parquet row-group packing; larger
-      values starve parallelism on the initial scan).
-    - AQE remains on: these are *initial* values; runtime coalescing
-      and skew splitting adjust per-stage (the skew-join test pins that
-      behavior).
-    """
-    total_cores = max(executors * cores_per_executor, 1)
-    by_size = -(-input_bytes // target_partition_bytes)  # ceil
-    return {
-        "spark.sql.shuffle.partitions": str(max(by_size, 2 * total_cores)),
-        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    }
-
-
 def package_zip(dest_dir: str | None = None) -> str:
     """Zip the pdf_extraction_spark package for spark-submit --py-files /
     SparkContext.addPyFile (multi-executor shipping)."""

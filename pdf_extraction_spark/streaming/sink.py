@@ -9,9 +9,10 @@ Failure contract:
 - a batch's docs land under ``batch_id=<n>`` via dynamic partition
   overwrite → a retried batch REPLACES its half-written output instead
   of appending duplicates;
-- the lineage row (snapshot_id = batch_id) is written only after the
-  docs commit — it is the marker; a batch whose lineage row exists is
-  skipped outright on redelivery;
+- the lineage rows (snapshot_id = batch_id) come from the extraction
+  tasks of the committed docs write and are appended only after it —
+  they are the marker; a batch whose lineage row exists is skipped
+  outright on redelivery;
 - the stream's own checkpoint handles source progress, so a restarted
   query re-reads nothing already processed; the lineage guard covers
   the foreachBatch-retry window the checkpoint cannot.

@@ -29,36 +29,13 @@ def main(argv=None):
     parser.add_argument("--output", required=True, help="output directory (docs/ + lineage/)")
     parser.add_argument("--buckets", type=int, default=16, help="checkpoint buckets")
     parser.add_argument("--repartition", type=int, default=0, help="url-hash repartition width (0 = off)")
-    parser.add_argument(
-        "--input-bytes",
-        type=int,
-        default=0,
-        help="corpus size hint: derives spark.sql.shuffle.partitions via "
-        "session.shuffle_conf_for instead of the submit-time default",
-    )
-    parser.add_argument(
-        "--executors", type=int, default=0,
-        help="executor count for --input-bytes sizing (default: from spark conf)",
-    )
     args = parser.parse_args(argv)
     if not args.input and not args.synth:
         parser.error("one of --input / --synth is required")
 
-    from pyspark.sql import SparkSession
+    from pdf_extraction_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("pdf_extraction_spark.extract").getOrCreate()
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-
-    if args.input_bytes:
-        from pdf_extraction_spark.session import shuffle_conf_for
-
-        execs = args.executors or int(
-            spark.conf.get("spark.executor.instances", "1")
-        )
-        cores = int(spark.conf.get("spark.executor.cores", "4"))
-        for k, v in shuffle_conf_for(args.input_bytes, execs, cores).items():
-            spark.conf.set(k, v)
+    spark = get_spark(app_name="pdf_extraction_spark.extract")
 
     from pdf_extraction_spark.plans.lineage import run_checkpointed_extraction
     from pdf_extraction_spark.sources.pages import read_pages, synth_pages_df

@@ -41,12 +41,11 @@ def main(argv=None):
     parser.add_argument("--bands", type=int, default=16)
     args = parser.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("pdf_extraction_spark.release").getOrCreate()
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+    from pdf_extraction_spark.session import get_spark
+
+    spark = get_spark(app_name="pdf_extraction_spark.release")
 
     from pdf_extraction_spark.operators.curation import with_gopher_flags
     from pdf_extraction_spark.operators.dedup import (

@@ -195,16 +195,16 @@ def test_extraction_has_single_python_crossing(spark):
     assert _plan(real).count("MapInPandas") == 1
 
 
-@pytest.mark.parametrize("path", ["extract_with_lineage", "turns_table"])
+@pytest.mark.parametrize("path", ["extract_counted", "turns_table"])
 def test_ingest_and_rag_extraction_single_python_crossing(spark, path):
     """The extraction paths the ingest job (plans.lineage) and the RAG
     fact table (plans.pipeline) run: on a table-scan input, exactly ONE
     fused MapInPandas and no per-column Python UDF stage."""
-    from pdf_extraction_spark.plans.lineage import extract_with_lineage
+    from pdf_extraction_spark.plans.lineage import extract_counted
     from pdf_extraction_spark.plans.pipeline import turns_table
     from pdf_extraction_spark.sources.pages import read_pages
 
-    build = {"extract_with_lineage": extract_with_lineage, "turns_table": turns_table}[path]
+    build = {"extract_counted": lambda p: extract_counted(p)[0], "turns_table": turns_table}[path]
     p = _plan(build(read_pages(spark, f"{SF}/documents.parquet").limit(0)))
     assert p.count("MapInPandas") == 1
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p

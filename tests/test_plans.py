@@ -469,6 +469,50 @@ class TestLineageResume:
         few.unpersist()
         assert counts[0] == counts[1] == counts[2], counts
 
+    def test_docs_hold_only_extracted_columns(self, spark, pages, tmp_path):
+        """Lineage comes from the write's tasks, so the docs table is the
+        extraction's own columns plus the partition key, nothing else."""
+        from pdf_extraction_spark.operators.extract import FUSED_SCHEMA
+        from pdf_extraction_spark.plans.lineage import run_checkpointed_extraction
+
+        stats = run_checkpointed_extraction(spark, pages, str(tmp_path / "cols"), n_buckets=2)
+        fused = spark.createDataFrame([], FUSED_SCHEMA).columns
+        assert spark.read.parquet(stats["docs_path"]).columns == fused + ["bucket"]
+
+    def test_same_pages_write_identical_docs(self, spark, pages, tmp_path):
+        """Two runs over the same pages write byte-identical docs part
+        files, bucket by bucket (file names carry a job id, so the
+        contents are compared)."""
+        import glob
+        import hashlib
+
+        from pdf_extraction_spark.plans.lineage import run_checkpointed_extraction
+
+        def digests(out):
+            docs = run_checkpointed_extraction(spark, pages, out, n_buckets=4)["docs_path"]
+            return sorted(
+                (os.path.basename(os.path.dirname(f)), hashlib.sha256(open(f, "rb").read()).digest())
+                for f in glob.glob(os.path.join(docs, "bucket=*", "part-*"))
+            )
+
+        first = digests(str(tmp_path / "a"))
+        assert len(first) >= 4
+        assert first == digests(str(tmp_path / "b"))
+
+    def test_corrupt_lineage_fails_before_any_docs_write(self, spark, pages, tmp_path):
+        """An unreadable lineage file is an error, not an empty completed
+        set: read as empty, it would recompute every bucket (and the sink
+        would re-commit redelivered batches) before failing later on the
+        same file."""
+        from pdf_extraction_spark.plans.lineage import run_checkpointed_extraction
+
+        out = tmp_path / "corrupt"
+        (out / "lineage").mkdir(parents=True)
+        (out / "lineage" / "part-00000-corrupt.parquet").write_bytes(b"not parquet")
+        with pytest.raises(Exception, match="part-00000-corrupt.parquet"):
+            run_checkpointed_extraction(spark, pages, str(out), n_buckets=2)
+        assert not (out / "docs").exists()
+
     def test_session_overwrite_mode_unchanged(self, spark, pages, tmp_path):
         """Both commit callers overwrite per write; neither leaves the
         caller's session switched to dynamic partition overwrite."""

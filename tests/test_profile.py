@@ -88,6 +88,18 @@ def test_twin_parity(spark, df):
     assert a2 == b2
 
 
+def test_top_values_group_signed_zeros_like_spark(spark):
+    """Spark's melt groups the top-3 by the rendered value, so -0.0 and
+    0.0 count apart; a twin grouping by the typed double would merge
+    them into one '-0.0:3' entry."""
+    zeros = [(-0.0,), (0.0,), (0.0,)]
+    got = table_profile(spark.createDataFrame(zeros, "x double"), ["x"]).first().top_values
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame(zeros, columns=["x"]))
+    want = con.execute(sql_table_profile("t", ["x"])).fetchone()[-1]
+    assert got == want == "0.0:2,-0.0:1"
+
+
 def test_profile_reads_source_exactly_twice(spark, tmp_path):
     """The single-pass contract: one wide agg + one melt = exactly TWO
     scans of the source regardless of how many columns are profiled

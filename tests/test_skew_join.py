@@ -6,24 +6,10 @@ This test pins that the session's AQE configuration actually does it:
 a power-law key join plans an AQE skew-split (the final adaptive plan
 marks the sort-merge join ``skew=true`` and multiplies the skewed
 partition), under thresholds scaled down to sandbox data sizes.
-
-Plus the pure-function cluster-sizing math (session.shuffle_conf_for).
 """
 
 import pytest
 from pyspark.sql import functions as F
-
-from pdf_extraction_spark.session import shuffle_conf_for
-
-
-def test_shuffle_conf_for_math():
-    # 100 TB / 192 MB ≈ 546k partitions — data-derived, not hardcoded
-    conf = shuffle_conf_for(100 * 1024**4, executors=1000, cores_per_executor=4)
-    assert int(conf["spark.sql.shuffle.partitions"]) == 546134
-    # small input floors at 2× total cores
-    conf = shuffle_conf_for(10 * 1024**2, executors=2, cores_per_executor=4)
-    assert int(conf["spark.sql.shuffle.partitions"]) == 16
-    assert conf["spark.sql.files.maxPartitionBytes"] == str(128 * 1024 * 1024)
 
 
 def test_aqe_splits_skewed_join(spark):

@@ -58,15 +58,18 @@ def test_engine_workers_run_the_fix(spark):
     the worker, which installs the fix before the function runs. Every
     partition's worker reports the engine's method; the driver keeps the
     interpreter's."""
-    from pdf_extraction_spark.plans.lineage import _extract_with_partition
+    from pdf_extraction_spark.operators.extract import _extract_parse_batches
     from pdf_extraction_spark.sources.pages import synth_pages_df
 
     def probe(batches):
         import zipimport
 
+        from pyspark import TaskContext
+
         fixed = zipimport.zipimporter.invalidate_caches.__module__ == "pdf_extraction_spark._worker"
-        for out in _extract_with_partition(batches):
-            yield pd.DataFrame({"partition_id": out["partition_id"], "fixed": fixed})
+        pid = TaskContext.get().partitionId()
+        for out in _extract_parse_batches(batches):
+            yield pd.DataFrame({"partition_id": [pid] * len(out), "fixed": fixed})
 
     rows = (
         synth_pages_df(spark, 16).repartition(4)
