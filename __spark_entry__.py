@@ -743,18 +743,18 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: documents → quality score → categorize (vocab keywords)
     → admin/short filter → per-(category, lang) rollup."""
     from pdf_extraction_spark.operators.categorize import explode_categories, with_categories
-    from pdf_extraction_spark.operators.filters import short_content_pred
+    from pdf_extraction_spark.operators.filters import word_count_col
     from pdf_extraction_spark.operators.project import quality_score_col
 
     docs = _docs(spark, SF_DEFAULT)
     scored = docs.withColumn(
         "quality_score",
-        quality_score_col(F.col("text"), DOC_ADMIN, DOC_BUSINESS, DOC_QA, DOC_CLOSING),
+        quality_score_col("text", DOC_ADMIN, DOC_BUSINESS, DOC_QA, DOC_CLOSING),
     )
     cats = explode_categories(
         with_categories(scored, content_col="text", keywords_by_category=DOC_CATEGORIES)
     )
-    kept = cats.filter(~short_content_pred(F.col("text"), 10))
+    kept = cats.filter(word_count_col("text") >= 10)
     return (
         kept.groupBy("category", "lang")
         .agg(
@@ -802,8 +802,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_filter_short(spark, sf):
         return (
             _docs(spark, sf)
-            .filter(word_count_col(F.col("text")) >= 25)
-            .select("doc_id", word_count_col(F.col("text")).alias("word_count"))
+            .filter(word_count_col("text") >= 25)
+            .select("doc_id", word_count_col("text").alias("word_count"))
         )
 
     # -- P13: word stats ----------------------------------------------------
@@ -817,9 +817,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return _docs(spark, sf).select(
             "doc_id",
             F.round(
-                quality_score_col(
-                    F.col("text"), DOC_ADMIN, DOC_BUSINESS, DOC_QA, DOC_CLOSING
-                ),
+                quality_score_col("text", DOC_ADMIN, DOC_BUSINESS, DOC_QA, DOC_CLOSING),
                 2,
             ).alias("quality_score"),
         )
@@ -827,15 +825,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # -- P11: speaker role ladder (inline fixture) --------------------------
     def q_speaker_role(spark, sf):
         return _speakers_df(spark).select(
-            "sid", speaker_role_col(F.col("speaker")).alias("speaker_role")
+            "sid", speaker_role_col("speaker").alias("speaker_role")
         )
 
     # -- P3–P6 combined chunk filter (inline turn fixture) ------------------
     def q_chunk_filter(spark, sf):
         turns = spark.createDataFrame(TURN_ROWS, "tid int, speaker string, content string")
-        return turns.filter(
-            keep_chunk_pred(F.col("speaker"), F.col("content"))
-        ).select("tid", "speaker")
+        return turns.filter(keep_chunk_pred("speaker", "content")).select("tid", "speaker")
 
     # -- C1: multi-label categorization over documents ----------------------
     def q_categorize(spark, sf):
@@ -1283,7 +1279,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pdf_extraction_spark.operators.filters import word_count_col
 
         return pass_rate(
-            _docs(spark, sf), word_count_col(F.col("text")) >= 30, ("lang",)
+            _docs(spark, sf), word_count_col("text") >= 30, ("lang",)
         ).orderBy("lang")
 
     # -- D2: keep-last per key over orders ----------------------------------
@@ -1308,7 +1304,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         docs = _docs(spark, sf).withColumn(
             "quality_score",
-            quality_score_col(F.col("text"), DOC_ADMIN, DOC_BUSINESS, DOC_QA, DOC_CLOSING),
+            quality_score_col("text", DOC_ADMIN, DOC_BUSINESS, DOC_QA, DOC_CLOSING),
         )
         emb = embed_documents(docs, text_col="text")
         qv = embed_text("spark join window agg")
@@ -4574,11 +4570,7 @@ def oracle_sql() -> dict[str, str]:
         # embed, cosine vs the shared literal query vector, reference
         # rerank weights; date is the fixed literal so recency = 1.0
         # (17 days ≤ 90 between 2024-01-15 and AS_OF).
-        qsql = (
-            "CAST("
-            + sql_quality_score("text", DOC_ADMIN, DOC_BUSINESS, DOC_QA, DOC_CLOSING)
-            + " AS DOUBLE)"
-        )
+        qsql = sql_quality_score("text", DOC_ADMIN, DOC_BUSINESS, DOC_QA, DOC_CLOSING)
         from pdf_extraction_spark.operators.embed import embed_text
 
         qv = embed_text("spark join window agg")
@@ -4679,9 +4671,9 @@ def oracle_sql() -> dict[str, str]:
             f"{wc} AS word_count FROM documents"
         ),
         "quality_score": (
-            "SELECT doc_id, CAST(round(CAST("
+            "SELECT doc_id, round("
             + sql_quality_score("text", DOC_ADMIN, DOC_BUSINESS, DOC_QA, DOC_CLOSING)
-            + " AS DOUBLE), 2) AS DOUBLE) AS quality_score FROM documents"
+            + ", 2) AS quality_score FROM documents"
         ),
         "speaker_role": (
             f"SELECT sid, {sql_speaker_role('speaker')} AS speaker_role FROM {speakers_values}"

@@ -5,7 +5,7 @@ if/elif priority order preserved — including the substring nature of the
 ``md`` rule (it fires inside longer words, as in the reference).
 """
 
-_ROLE_RULES = [
+ROLE_RULES = [
     ("CEO", ("ceo", "chief executive")),
     ("CFO", ("cfo", "chief financial")),
     ("COO", ("coo", "chief operating")),
@@ -17,7 +17,7 @@ _ROLE_RULES = [
 
 def speaker_role(speaker_name: str) -> str:
     lower = speaker_name.lower()
-    for role, needles in _ROLE_RULES:
+    for role, needles in ROLE_RULES:
         if any(n in lower for n in needles):
             return role
     return "Analyst/Other"

@@ -8,8 +8,6 @@ curly apostrophes survive as ASCII while straight ones vanish.
 
 import re
 
-_TRIPLE_APOS = re.compile(r"'''")
-_APOS = re.compile(r"'")
 _MULTI_SPACE = re.compile(r" +")
 _MULTI_NL = re.compile(r"\n{3,}")
 _PAGE_NO = re.compile(r"Page \d+ of \d+", re.IGNORECASE)

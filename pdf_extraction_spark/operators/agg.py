@@ -10,17 +10,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def category_rollup(chunks: DataFrame, group_cols=("company", "category")) -> DataFrame:
-    """A1–A3: per-group doc count, date range, distinct speakers/files."""
-    return chunks.groupBy(*group_cols).agg(
-        F.count("*").alias("total_documents"),
-        F.min("date").alias("earliest"),
-        F.max("date").alias("latest"),
-        F.size(F.collect_set("speaker")).alias("n_speakers"),
-        F.size(F.collect_set("source_file")).alias("n_source_files"),
-    )
-
-
 def summary_counts(chunks: DataFrame, group_cols=("category",)) -> DataFrame:
     """A4/A7: counts per group."""
     return chunks.groupBy(*group_cols).agg(F.count("*").alias("n_docs"))
@@ -53,17 +42,6 @@ def pass_rate(df: DataFrame, keep_pred, group_cols=()) -> DataFrame:
     if group_cols:
         return df.groupBy(*group_cols).agg(*agg)
     return df.agg(*agg)
-
-
-def keep_last_by(df: DataFrame, key_cols, order_col) -> DataFrame:
-    """D2: later record wins per key (executive roster merge —
-    ``dict.update`` keep-last semantics, executive_extractor.py:125)."""
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(order_col))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 DEFAULT_QUANTILES = ((1, 4), (1, 2), (3, 4))

@@ -1,13 +1,20 @@
-"""Chunk filters (P3–P6) as native Catalyst predicates.
+"""Chunk filters (P3–P6) and the word count, written once as SQL text.
 
-Single codegen'd predicate — no UDFs, fully pushdown-able. Semantics per
-the reference filter (filter.py:36-72): MANAGEMENT allowlist beats
-everything; then speaker blocklist; then content rules (admin keyword
-substring OR < 10 words). Word counting matches Python ``str.split()``
-(runs of whitespace, no empty tokens).
+:func:`sql_keep_chunk` is the one definition of the chunk rule: SQL
+text that Spark and DuckDB both parse, so the engine's predicate and
+the oracle's are the same string. The Spark predicate is ``F.expr`` of
+that text — one codegen'd predicate, no UDF, fully pushdown-able.
+Only the word count differs between the dialects, so the rule takes it
+as a function argument: :func:`spark_word_count` on Spark,
+:func:`sql_word_count` (the default) on DuckDB.
+
+Semantics per the reference filter (filter.py:36-72): MANAGEMENT
+allowlist beats everything; then speaker blocklist; then content rules
+(admin keyword substring OR < 10 words). Word counting matches Python
+``str.split()`` (runs of whitespace, no empty tokens).
 """
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..kernels.filters import (
@@ -17,87 +24,61 @@ from ..kernels.filters import (
     REMOVE_SPEAKERS,
 )
 from ..kernels.wsre import PY_WS_SPLIT
+from .topk import spark_sql_string
 
 
-def word_count_col(col: Column) -> Column:
-    """Python ``len(s.split())`` semantics: split on whitespace runs,
+def sql_str(s: str) -> str:
+    """A string literal both engines read alike: a quote is doubled,
+    which Spark and DuckDB both accept. A backslash is refused: Spark's
+    parser reads it as an escape, DuckDB's as itself."""
+    if "\\" in s:
+        raise ValueError(f"backslash in a shared SQL literal: {s!r}")
+    return "'" + s.replace("'", "''") + "'"
+
+
+def spark_word_count(expr: str) -> str:
+    """Python ``len(s.split())`` in Spark SQL: split on whitespace runs,
     drop empty tokens. The split class is the *measured* Python
     whitespace set spelled explicitly (kernels.wsre.PY_WS) — Java
     ``(?U)\\s`` would miss the C0 separators ``\\x1C-\\x1F`` that
     ``str.split()`` honors, and the same class text drives the DuckDB
     twin, so kernel, Spark, and oracle agree on EVERY input."""
-    return F.size(F.filter(F.split(col, PY_WS_SPLIT), lambda x: x != F.lit("")))
+    return f"size(filter(split({expr}, {spark_sql_string(PY_WS_SPLIT)}), t -> t <> ''))"
 
-
-def contains_any(col: Column, needles) -> Column:
-    """True when lower(col) contains any needle — one codegen'd OR chain."""
-    lowered = F.lower(col)
-    pred = F.lit(False)
-    for n in needles:
-        pred = pred | lowered.contains(n.lower())
-    return pred
-
-
-def admin_content_pred(content: Column, keywords=None) -> Column:
-    """P3: content carries an admin keyword."""
-    return contains_any(content, keywords if keywords is not None else REMOVE_KEYWORDS)
-
-
-def short_content_pred(content: Column, min_words: int = MIN_WORDS) -> Column:
-    """P4: fewer than ``min_words`` words."""
-    return word_count_col(content) < min_words
-
-
-def keep_chunk_pred(
-    speaker: Column,
-    content: Column,
-    keywords=None,
-    remove_speakers=None,
-    keep_speakers=None,
-    min_words: int = MIN_WORDS,
-) -> Column:
-    """P3∧P4∧P5 with the P6 allowlist override (precedence per
-    filter.py:61-72)."""
-    keep_speakers = keep_speakers if keep_speakers is not None else ALWAYS_KEEP_SPEAKERS
-    remove_speakers = remove_speakers if remove_speakers is not None else REMOVE_SPEAKERS
-    return speaker.isin(keep_speakers) | (
-        ~speaker.isin(remove_speakers)
-        & ~admin_content_pred(content, keywords)
-        & ~short_content_pred(content, min_words)
-    )
-
-
-def filter_chunks(df: DataFrame, speaker_col: str = "speaker", content_col: str = "content", **kw) -> DataFrame:
-    return df.filter(keep_chunk_pred(F.col(speaker_col), F.col(content_col), **kw))
-
-
-# ---------------------------------------------------------------------------
-# oracle twins: the same predicates as ANSI SQL (DuckDB-compatible)
-# ---------------------------------------------------------------------------
 
 def sql_word_count(expr: str) -> str:
     # CAST: DuckDB len() yields BIGINT, Spark size() yields INT.
-    # Same explicit Python-whitespace class text as word_count_col.
+    # Same explicit Python-whitespace class text as spark_word_count.
     return (
         f"CAST(len(list_filter(string_split_regex({expr}, '{PY_WS_SPLIT}'), "
         "x -> x <> '')) AS INT)"
     )
 
 
+def word_count_col(expr: str) -> Column:
+    """Word count of the column name or SQL expression ``expr``."""
+    return F.expr(spark_word_count(expr))
+
+
 def sql_contains_any(expr: str, needles) -> str:
-    parts = " OR ".join(
-        "contains(lower({}), '{}')".format(expr, n.lower().replace("'", "''"))
-        for n in needles
-    )
+    """True when lower(expr) contains any needle."""
+    parts = " OR ".join(f"contains(lower({expr}), {sql_str(n.lower())})" for n in needles)
     return f"({parts})"
 
 
-def sql_keep_chunk(speaker_expr: str, content_expr: str, keywords=None, min_words: int = MIN_WORDS) -> str:
-    keywords = keywords if keywords is not None else REMOVE_KEYWORDS
-    keep = ", ".join(f"'{s}'" for s in ALWAYS_KEEP_SPEAKERS)
-    remove = ", ".join(f"'{s}'" for s in REMOVE_SPEAKERS)
+def sql_keep_chunk(speaker: str, content: str, word_count=sql_word_count) -> str:
+    """P3∧P4∧P5 with the P6 allowlist override (precedence per
+    filter.py:61-72); ``word_count`` renders the dialect's word count."""
+    keep = ", ".join(map(sql_str, ALWAYS_KEEP_SPEAKERS))
+    remove = ", ".join(map(sql_str, REMOVE_SPEAKERS))
     return (
-        f"({speaker_expr} IN ({keep}) OR ({speaker_expr} NOT IN ({remove}) "
-        f"AND NOT {sql_contains_any(content_expr, keywords)} "
-        f"AND {sql_word_count(content_expr)} >= {min_words}))"
+        f"({speaker} IN ({keep}) OR ({speaker} NOT IN ({remove}) "
+        f"AND NOT {sql_contains_any(content, REMOVE_KEYWORDS)} "
+        f"AND {word_count(content)} >= {MIN_WORDS}))"
     )
+
+
+def keep_chunk_pred(speaker: str, content: str) -> Column:
+    """:func:`sql_keep_chunk` over the column names or SQL expressions
+    ``speaker`` and ``content``, as a Spark predicate."""
+    return F.expr(sql_keep_chunk(speaker, content, spark_word_count))

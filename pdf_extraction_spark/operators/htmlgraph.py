@@ -180,14 +180,6 @@ def anchor_terms(links: DataFrame, min_count: int = 2) -> DataFrame:
     )
 
 
-def pagerank_edges(graph: DataFrame) -> DataFrame:
-    """Adapter: the (src, dst) integer-weight edge frame
-    components.pagerank expects, weights = n_links."""
-    return graph.select(
-        F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-    )
-
-
 # ---------------------------------------------------------------------------
 # DuckDB twins
 # ---------------------------------------------------------------------------

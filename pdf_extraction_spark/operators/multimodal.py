@@ -124,19 +124,6 @@ def extract_media_features(media: DataFrame, feat_dim: int = 16) -> DataFrame:
     return media.mapInPandas(batches, schema=FEATURES_SCHEMA)
 
 
-def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video rows → one row per sampled frame timestamp (pure plumbing:
-    the timestamps are real, frame decode goes through DECODERS['video']
-    when registered)."""
-    frames = F.sequence(
-        F.lit(0), F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)), F.lit(every_ms)
-    )
-    return (
-        media.filter(F.col("media_type") == "video")
-        .select("media_id", F.explode(frames).alias("frame_ts_ms"))
-    )
-
-
 def synth_real_media_df(spark, n_rows: int = 24) -> DataFrame:
     """Deterministic rows whose payloads are GENUINELY decodable (P6
     PPM / 24-bit BMP / PCM WAV — kernels/mediaio.synth_real_payload,

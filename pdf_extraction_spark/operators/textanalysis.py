@@ -13,7 +13,6 @@ from pyspark.sql import types as T
 
 from ..kernels.textstats import detect_language, fingerprint, token_count
 from ..session import per_call_pandas_udf
-from .filters import word_count_col
 
 # regex-token count, native: word runs (with inner apostrophes) or single
 # non-space punctuation — mirrors kernels.textstats.tokenize.
@@ -37,8 +36,6 @@ from ..kernels.wsre import WHITE_SPACE_BODY as _UWS
 
 _CLS_W = r"[\p{L}\p{M}\p{N}_]"
 _TOKEN_PATTERN = rf"{_CLS_W}+(?:'{_CLS_W}+)?|[^\p{{L}}\p{{N}}_{_UWS}]"
-_JAVA_TOKEN_PATTERN = _TOKEN_PATTERN
-_RE2_TOKEN_PATTERN = _TOKEN_PATTERN
 # punctuation = not word-class, not whitespace — the same shared class
 # text on both engines (Java (?U)[^\w\s] had the join-control and
 # gc=No divergences described above)
@@ -46,11 +43,11 @@ _PUNCT_PATTERN = rf"[^\p{{L}}\p{{M}}\p{{N}}_{_UWS}]"
 
 
 def token_count_col(text: Column) -> Column:
-    return F.size(F.regexp_extract_all(text, F.lit(_JAVA_TOKEN_PATTERN), F.lit(0)))
+    return F.size(F.regexp_extract_all(text, F.lit(_TOKEN_PATTERN), F.lit(0)))
 
 
 def sql_token_count(expr: str) -> str:
-    pat = _RE2_TOKEN_PATTERN.replace("'", "''")
+    pat = _TOKEN_PATTERN.replace("'", "''")
     return f"CAST(len(regexp_extract_all({expr}, '{pat}')) AS INT)"
 
 
@@ -228,16 +225,6 @@ def fix_mojibake_col(c: Column, passes: int = 1) -> Column:
             ).otherwise(out),
         ).otherwise(out)
     return out
-
-
-def with_text_analysis(df: DataFrame, text_col: str = "text") -> DataFrame:
-    c = F.col(text_col)
-    return (
-        with_quality_ratios(df, text_col)
-        .withColumn("token_count", token_count_col(c))
-        .withColumn("detected_lang", langid_udf(c))
-        .withColumn("doc_fingerprint", fingerprint_udf(c))
-    )
 
 
 # --------------------------------------------------------------------------

@@ -24,6 +24,9 @@ write committed; a failed or retried attempt adds nothing. The docs
 table therefore holds only the extracted columns (``FUSED_SCHEMA`` plus
 the partition key), and the lineage frame is built on the driver from
 pandas through Arrow, with no Python task and no read-back of the docs.
+The write then unregisters its accumulator, which PySpark would
+otherwise keep for the life of the application: one per bucket, and one per
+micro-batch of the streaming sink.
 
 The batch loop writes one bucket ahead: bucket b+1's docs write runs on
 one background thread while the main thread appends bucket b's lineage.
@@ -48,7 +51,7 @@ from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 
 import pandas as pd
-from pyspark.accumulators import AccumulatorParam
+from pyspark.accumulators import AccumulatorParam, _accumulatorRegistry
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
@@ -115,12 +118,17 @@ def write_bucket(pages: DataFrame, docs_path: str, key: str, value: int) -> list
     return the lineage rows of the write's tasks. An empty bucket writes
     no partition and returns no rows."""
     docs, rows = extract_counted(pages)
-    (
-        docs.withColumn(key, F.lit(value).cast("long"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(key).parquet(docs_path)
-    )
-    return rows.value
+    try:
+        (
+            docs.withColumn(key, F.lit(value).cast("long"))
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy(key).parquet(docs_path)
+        )
+        return rows.value
+    finally:
+        # PySpark never unregisters an accumulator; once the write has
+        # returned (or failed) no task of it can report to this one again
+        _accumulatorRegistry.pop(rows.aid, None)
 
 
 def append_lineage(spark: SparkSession, lineage_path: str, value: int, rows: list) -> None:

@@ -44,7 +44,7 @@ def turns_table(pages: DataFrame) -> DataFrame:
         docs, keep_cols=("url", "warc_ts", "lang", "company", "doc_date", "quarter", "fiscal_year")
     )
     turns = with_word_stats(turns)
-    turns = turns.withColumn("speaker_role", speaker_role_col(F.col("speaker")))
+    turns = turns.withColumn("speaker_role", speaker_role_col("speaker"))
     turns = turns.withColumn("date", F.date_format("doc_date", "yyyy-MM-dd"))
     turns = turns.withColumn(
         "chunk_id",
@@ -55,7 +55,7 @@ def turns_table(pages: DataFrame) -> DataFrame:
 
 def filtered_chunks(turns: DataFrame) -> DataFrame:
     """P3–P6 boilerplate/admin filter."""
-    return turns.filter(keep_chunk_pred(F.col("speaker"), F.col("content")))
+    return turns.filter(keep_chunk_pred("speaker", "content"))
 
 
 def categorized_chunks(turns: DataFrame, keywords_by_category=None) -> DataFrame:
@@ -68,7 +68,7 @@ def categorized_chunks(turns: DataFrame, keywords_by_category=None) -> DataFrame
 
 def scored_chunks(chunks: DataFrame) -> DataFrame:
     """P10 quality score."""
-    return chunks.withColumn("quality_score", quality_score_col(F.col("content")))
+    return chunks.withColumn("quality_score", quality_score_col("content"))
 
 
 def executive_chunks(chunks: DataFrame) -> DataFrame:

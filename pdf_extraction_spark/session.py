@@ -23,7 +23,6 @@ ARROW_BATCH_ROWS = 256
 def get_spark(
     app_name: str = "pdf_extraction_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -33,19 +32,10 @@ def get_spark(
     if master is not None or "PYSPARK_GATEWAY_PORT" not in os.environ:
         master = master or f"local[{cpus}]"
         conf["spark.master"] = master
-        if shuffle_partitions is None:
-            # local: ~1 shuffle partition per core; on a real cluster this is
-            # sized to keep post-shuffle partitions in the 64–256 MB range
-            n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
-            if n == "*":
-                shuffle_partitions = cpus
-            elif "," in n:  # local-cluster[n_exec, cores_per_exec, mem_mb]
-                n_exec, cores_per = n.split(",")[:2]
-                shuffle_partitions = max(int(n_exec) * int(cores_per), 1)
-            else:
-                shuffle_partitions = max(int(n), 1)
-    if shuffle_partitions is not None:
-        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        # local[N]: ~1 shuffle partition per core; on a real cluster this is
+        # sized to keep post-shuffle partitions in the 64–256 MB range
+        n = int(master[master.find("[") + 1 : master.find("]")]) if "[" in master else cpus
+        conf["spark.sql.shuffle.partitions"] = str(max(n, 1))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -103,12 +93,4 @@ def package_zip(dest_dir: str | None = None) -> str:
                 full = os.path.join(dirpath, fn)
                 rel = os.path.relpath(full, root)
                 zf.write(full, rel)
-    return zip_path
-
-
-def ship_package(spark: SparkSession) -> str:
-    """Make the engine importable on remote executors (the sandbox
-    equivalent of ``spark-submit --py-files pdf_extraction_spark.zip``)."""
-    zip_path = package_zip()
-    spark.sparkContext.addPyFile(zip_path)
     return zip_path

@@ -47,11 +47,14 @@ def main(argv=None):
 
     spark = get_spark(app_name="pdf_extraction_spark.release")
 
+    from pyspark.sql.types import StructType
+
     from pdf_extraction_spark.operators.curation import with_gopher_flags
     from pdf_extraction_spark.operators.dedup import (
         drop_exact_duplicates,
         minhash_near_dup_drops,
     )
+    from pdf_extraction_spark.operators.extract import FUSED_SCHEMA
     from pdf_extraction_spark.operators.release import shard_manifest, shard_of
     from pdf_extraction_spark.operators.skew import host_col
     from pdf_extraction_spark.operators.textanalysis import token_count_col
@@ -59,12 +62,17 @@ def main(argv=None):
     t0 = time.perf_counter()
     walls = {}
 
+    # read with the extraction's own schema and keep exactly its columns:
+    # the docs table's partition key (``bucket``, or ``batch_id`` from the
+    # streaming sink) is plumbing, not part of the released corpus
+    fused = StructType.fromDDL(FUSED_SCHEMA)
     # persist the analyzed frame ONCE: every downstream stage (exact
     # dedup, the near-dup anti-join, the Gopher gate, the corpus write)
     # re-reads it, and without the cache each staged action would re-run
     # the read + tokenize lineage from parquet (measured 5× cost at sf1)
     analyzed = (
-        spark.read.parquet(args.docs)
+        spark.read.schema(fused).parquet(args.docs)
+        .select(*fused.names)
         .withColumn("doc_id", F.xxhash64("url"))
         .withColumn("token_count", token_count_col(F.col("text")))
     ).persist()

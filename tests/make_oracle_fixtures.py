@@ -234,10 +234,10 @@ def pq_codebook_table() -> pa.Table:
 # --------------------------------------------------------------------------
 
 def _speaker_role(speaker: str) -> str:
-    from pdf_extraction_spark.operators.project import _ROLE_RULES
+    from pdf_extraction_spark.kernels.roles import ROLE_RULES
 
     low = speaker.lower()
-    for role, needles in _ROLE_RULES:
+    for role, needles in ROLE_RULES:
         if any(n in low for n in needles):
             return role
     return "Analyst/Other"

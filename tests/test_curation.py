@@ -746,7 +746,7 @@ class TestRandomizedRound1Twins:
         df, con = self._both(spark, 991)
         _compare(
             df.select("doc_id", F.length("text").cast("int").alias("content_length"),
-                      word_count_col(F.col("text")).alias("word_count")),
+                      word_count_col("text").alias("word_count")),
             con,
             f"SELECT doc_id, CAST(length(text) AS INT) AS content_length, "
             f"{sql_word_count('text')} AS word_count FROM documents",
@@ -776,7 +776,7 @@ class TestRandomizedRound1Twins:
         out = df.select(
             "doc_id",
             F.round(
-                quality_score_col(F.col("text"), e.DOC_ADMIN, e.DOC_BUSINESS, e.DOC_QA, e.DOC_CLOSING), 2
+                quality_score_col("text", e.DOC_ADMIN, e.DOC_BUSINESS, e.DOC_QA, e.DOC_CLOSING), 2
             ).cast("double").alias("quality_score"),
         )
         _compare(

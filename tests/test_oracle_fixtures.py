@@ -109,8 +109,6 @@ class TestSparkParity:
     def test_word_count_unicode_whitespace_parity(self, spark):
         """ADVICE item: Spark word_count_col must match Python
         str.split() on Unicode whitespace (NBSP, LINE SEPARATOR)."""
-        from pyspark.sql import functions as F
-
         from pdf_extraction_spark.operators.filters import word_count_col
 
         texts = [
@@ -122,7 +120,7 @@ class TestSparkParity:
             "",
         ]
         rows = spark.createDataFrame([(t,) for t in texts], "t string").select(
-            "t", word_count_col(F.col("t")).alias("wc")
+            "t", word_count_col("t").alias("wc")
         ).collect()
         for r in rows:
             assert r["wc"] == len(r["t"].split()), repr(r["t"])

@@ -20,7 +20,7 @@ class TestNativeKernelParity:
         from pdf_extraction_spark.operators.project import quality_score_col
 
         rows = docs.select(
-            "doc_id", "text", quality_score_col(F.col("text")).alias("native")
+            "doc_id", "text", quality_score_col("text").alias("native")
         ).collect()
         for r in rows:
             assert r.native == quality_score(r.text), r.doc_id
@@ -35,7 +35,7 @@ class TestNativeKernelParity:
             "", "cEo mixed", "a managing director b",
         ]
         df = spark.createDataFrame([(n,) for n in names], ["speaker"])
-        rows = df.select("speaker", speaker_role_col(F.col("speaker")).alias("native")).collect()
+        rows = df.select("speaker", speaker_role_col("speaker").alias("native")).collect()
         for r in rows:
             assert r.native == speaker_role(r.speaker), r.speaker
 
@@ -53,7 +53,7 @@ class TestNativeKernelParity:
         from pdf_extraction_spark.operators.filters import word_count_col
 
         rows = docs.select(
-            "text", word_count_col(F.col("text")).alias("native"), F.length("text").alias("n")
+            "text", word_count_col("text").alias("native"), F.length("text").alias("n")
         ).collect()
         for r in rows:
             assert r.native == len(r.text.split())
@@ -74,10 +74,62 @@ class TestNativeKernelParity:
         df = spark.createDataFrame(cases, ["speaker", "content"])
         rows = df.select(
             "speaker", "content",
-            keep_chunk_pred(F.col("speaker"), F.col("content")).alias("native"),
+            keep_chunk_pred("speaker", "content").alias("native"),
         ).collect()
         for r in rows:
             assert r.native == keep_chunk(r.speaker, r.content), (r.speaker, r.content)
+
+    def test_quality_score_is_one_double_ladder_in_both_engines(self, spark, docs):
+        """One ladder text, DOUBLE in both engines: Spark runs it (with
+        its word count) as quality_score_col does, and DuckDB runs it as
+        is, with no CAST, and gets Spark's score on every document."""
+        import duckdb
+
+        from pdf_extraction_spark.operators.filters import spark_word_count
+        from pdf_extraction_spark.operators.project import quality_score_col, sql_quality_score
+
+        scored = docs.select("doc_id", "text", quality_score_col("text").alias("q"))
+        assert dict(scored.dtypes)["q"] == "double"
+        shared = docs.selectExpr(sql_quality_score("text", word_count=spark_word_count) + " AS q")
+        assert dict(shared.dtypes)["q"] == "double"
+        rows = scored.collect()
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", [(r.doc_id, r.text) for r in rows])
+        q = sql_quality_score("text")
+        got = {
+            doc_id: (score, kind)
+            for doc_id, score, kind in con.execute(
+                f"SELECT doc_id, {q}, typeof({q}) FROM documents"
+            ).fetchall()
+        }
+        assert len(got) == len(rows) > 0
+        for r in rows:
+            assert got[r.doc_id] == (r.q, "DOUBLE"), r.doc_id
+
+    def test_quoted_keyword_drops_the_chunk_everywhere(self, spark):
+        """The admin keyword ``press '*' then '0'`` carries quotes; the
+        kernel, Spark and DuckDB all drop a chunk that contains it and
+        keep the same chunk without it."""
+        import duckdb
+
+        from pdf_extraction_spark.kernels.filters import keep_chunk
+        from pdf_extraction_spark.operators.filters import keep_chunk_pred, sql_keep_chunk
+
+        cases = [
+            (0, "Rahul", "to ask a question please Press '*' then '0' on your touchtone phone"),
+            (1, "Rahul", "to ask a question please press star then zero on your touchtone phone"),
+        ]
+        assert [keep_chunk(s, c) for _, s, c in cases] == [False, True]
+        df = spark.createDataFrame(cases, "tid int, speaker string, content string")
+        assert [r.tid for r in df.filter(keep_chunk_pred("speaker", "content")).collect()] == [1]
+        con = duckdb.connect()
+        con.execute("CREATE TABLE turns (tid INT, speaker VARCHAR, content VARCHAR)")
+        con.executemany("INSERT INTO turns VALUES (?, ?, ?)", cases)
+        kept = con.execute(
+            f"SELECT tid FROM turns WHERE {sql_keep_chunk('speaker', 'content')} ORDER BY tid"
+        ).fetchall()
+        assert kept == [(1,)]
 
     def test_financial_amounts(self, spark):
         from pdf_extraction_spark.kernels.financial import extract_revenue
@@ -171,7 +223,7 @@ class TestNativeKernelParity:
         from pdf_extraction_spark.operators.embed import embed_documents, embed_text
         from pdf_extraction_spark.operators.project import quality_score_col
 
-        scored = docs.withColumn("quality_score", quality_score_col(F.col("text")))
+        scored = docs.withColumn("quality_score", quality_score_col("text"))
         out = embed_documents(scored, text_col="text").limit(20).collect()
         assert out
         for r in out:

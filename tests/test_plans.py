@@ -469,6 +469,20 @@ class TestLineageResume:
         few.unpersist()
         assert counts[0] == counts[1] == counts[2], counts
 
+    def test_writes_release_their_accumulators(self, spark, pages, tmp_path):
+        """Each docs write reports its lineage rows through an accumulator
+        that PySpark would keep registered for the life of the application:
+        two full runs in one session must leave the registry as it was."""
+        from pyspark.accumulators import _accumulatorRegistry
+
+        from pdf_extraction_spark.plans.lineage import run_checkpointed_extraction
+
+        before = len(_accumulatorRegistry)
+        for name in ("first", "second"):
+            stats = run_checkpointed_extraction(spark, pages, str(tmp_path / name), n_buckets=4)
+            assert stats["processed_buckets"] == [0, 1, 2, 3]
+            assert len(_accumulatorRegistry) == before, name
+
     def test_docs_hold_only_extracted_columns(self, spark, pages, tmp_path):
         """Lineage comes from the write's tasks, so the docs table is the
         extraction's own columns plus the partition key, nothing else."""
@@ -808,6 +822,42 @@ class TestCurationCli:
         assert corpus.filter((F.col("offset_in_seq") < 0) | (F.col("offset_in_seq") >= 256)).count() == 0
         assert spark.read.parquet(_os.path.join(out, "pack_stats")).count() > 0
         assert spark.read.parquet(_os.path.join(out, "host_stats")).count() > 0
+
+
+class TestReleaseCli:
+    def test_release_drops_the_partition_key(
+        self, spark, pages, tmp_path, keep_shuffle_partitions, monkeypatch
+    ):
+        """scripts/run_release.py main() in-process over a bucketed
+        extraction output: the released corpus carries the extraction's
+        columns, not its ``bucket`` partition key."""
+        import glob
+        import importlib.util
+
+        import pyarrow.parquet as pq
+        from pyspark.sql import SparkSession
+
+        from pdf_extraction_spark.plans.lineage import run_checkpointed_extraction
+
+        spec = importlib.util.spec_from_file_location(
+            "run_release", os.path.join(os.path.dirname(__file__), "..", "scripts", "run_release.py")
+        )
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+
+        docs = run_checkpointed_extraction(spark, pages, str(tmp_path / "extract"), n_buckets=2)["docs_path"]
+        langs = ",".join(sorted({r.lang for r in spark.read.parquet(docs).select("lang").distinct().collect()}))
+        out = str(tmp_path / "release")
+        monkeypatch.setattr(SparkSession, "stop", lambda self: None)  # keep the shared test session
+        mod.main(["--docs", docs, "--output", out, "--shards", "4", "--min-tokens", "1",
+                  "--languages", langs])
+
+        files = glob.glob(os.path.join(out, "corpus", "shard=*", "*.parquet"))
+        assert files
+        for f in files:
+            names = pq.read_schema(f).names
+            assert "bucket" not in names, (f, names)
+            assert {"url", "text", "lang", "doc_id"} <= set(names)
 
 
 class TestCorpusCard:

@@ -40,7 +40,7 @@ def _mk_rows(n=300, seed=99):
 
 def test_token_and_punct_class_parity(spark, tmp_path):
     from pdf_extraction_spark.operators.textanalysis import (
-        _JAVA_TOKEN_PATTERN,
+        _TOKEN_PATTERN,
         _PUNCT_PATTERN,
         sql_token_count,
     )
@@ -54,7 +54,7 @@ def test_token_and_punct_class_parity(spark, tmp_path):
         .select(
             "doc_id",
             F.size(
-                F.regexp_extract_all("text", F.lit(_JAVA_TOKEN_PATTERN), F.lit(0))
+                F.regexp_extract_all("text", F.lit(_TOKEN_PATTERN), F.lit(0))
             ).alias("n_tok"),
             F.size(
                 F.regexp_extract_all("text", F.lit(_PUNCT_PATTERN), F.lit(0))

@@ -103,8 +103,6 @@ EXOTIC_TEXTS = [
 def test_word_count_triple_agreement(spark):
     """kernel len(s.split()) == Spark word_count_col == DuckDB
     sql_word_count on every exotic-whitespace text."""
-    from pyspark.sql import functions as F
-
     from pdf_extraction_spark.operators.filters import (
         sql_word_count,
         word_count_col,
@@ -115,7 +113,7 @@ def test_word_count_triple_agreement(spark):
     )
     got = {
         r.i: r.n
-        for r in df.select("i", word_count_col(F.col("t")).alias("n")).collect()
+        for r in df.select("i", word_count_col("t").alias("n")).collect()
     }
     con = duckdb.connect()
     for i, t in enumerate(EXOTIC_TEXTS):
